@@ -17,7 +17,6 @@ Mirrors the reference's ``main`` -> ``process_channel`` lifecycle
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from knowledgebot_spark.operators import edits as ed
 from knowledgebot_spark.operators import extraction as ex
@@ -77,11 +76,3 @@ def run_extraction(
         "n_chunks_in_table": spark.read.parquet(output_path).count(),
     }
 
-
-def read_chunk_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def chunks_for_message(spark: SparkSession, path: str, msg_key: str) -> DataFrame:
-    """Partition-pruned point lookup by message key."""
-    return spark.read.parquet(path).filter(F.col("msg_key") == msg_key)

@@ -52,16 +52,3 @@ def make_embed_udf(dim: int = DEFAULT_DIM):
 def with_embedding(df: DataFrame, text_col: str = "text", dim: int = DEFAULT_DIM) -> DataFrame:
     return df.withColumn("embedding", make_embed_udf(dim)(F.col(text_col)))
 
-
-def hash_component_micro_expr(text_col: str, j: str) -> str:
-    """JVM built-in equivalent of one embedding component, scaled to exact
-    integer micro-units: floor(component * 1e6) == (sum * 1000) div n.
-    Pure integer arithmetic — bit-reproducible across engines (dividing as
-    doubles lands on round-half boundaries, where Spark HALF_UP and DuckDB
-    half-even disagree)."""
-    toks = f"split({text_col}, ' ')"
-    comp = f"cast(conv(substring(md5(concat(t, ':', {j})), 1, 8), 16, 10) AS BIGINT) % 1000"
-    return (
-        f"(aggregate({toks}, CAST(0 AS BIGINT), (a, t) -> a + ({comp})) * 1000)"
-        f" div size({toks})"
-    )

@@ -2588,6 +2588,15 @@ def llm_kmeans_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _sq_dist_bigint(a: str, b: str) -> str:
+    """Exact squared Euclidean distance between two BIGINT-quantized
+    vector expressions, as a left-to-right SQL fold."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    )
+
+
 def _kmeans_assign2(spark: SparkSession, sf: str) -> DataFrame:
     """(vec_id, cid, di) after the two deterministic Lloyd iterations —
     the Spark twin of the ``_duck_kmeans_cte`` a2 relation, shared by
@@ -2606,8 +2615,7 @@ def _kmeans_assign2(spark: SparkSession, sf: str) -> DataFrame:
     )
     best1 = F.expr(
         "array_sort(transform(cents, s -> struct("
-        "aggregate(zip_with(qv, s.c, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS d, s.cid AS cid)))[0].cid"
+        f"{_sq_dist_bigint('qv', 's.c')} AS d, s.cid AS cid)))[0].cid"
     )
     a1 = q.crossJoin(F.broadcast(cents0)).select("vec_id", "qv", best1.alias("cid"))
 
@@ -3114,8 +3122,7 @@ def llm_embed_pq(spark: SparkSession, sf: str) -> DataFrame:
     )
     best = F.expr(
         "array_sort(transform(cents, c -> struct("
-        "aggregate(zip_with(sv, c.sv, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS d, c.cid AS cid)))[0]"
+        f"{_sq_dist_bigint('sv', 'c.sv')} AS d, c.cid AS cid)))[0]"
     )
     assigned = subs.join(F.broadcast(cb), "s").select(
         "vec_id", "s", best.alias("best")
@@ -3744,10 +3751,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id", "qv", F.lit(1).alias("rank"), F.lit(0).cast("long").alias("dmin")
     )
     picks = [first.localCheckpoint(eager=True)]
-    dist = F.expr(
-        "aggregate(zip_with(qv, s_qv, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
+    dist = F.expr(_sq_dist_bigint("qv", "s_qv"))
     for r in range(2, _KC_K + 1):
         prev = picks[0]
         for p in picks[1:]:
@@ -3832,15 +3836,17 @@ def llm_dedup_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
     threaded on the driver, re-paid per invocation — four ~350-op plans
     analyzed in parallel threads replace it (A/B evidence in
     OPTIMIZATION_r14.md; checkpoint-per-detector WITHOUT threads was
-    rejected in round 13 because it serialized the detectors' execution;
-    KB_OVERLAP_SERIAL=1 restores the one-plan composition for engines
-    whose driver must not run concurrent jobs).  Each checkpoint is
+    rejected in round 13 because it serialized the detectors' execution).
+    The per-thread ``setJobDescription`` assumes pinned-thread mode
+    (``PYSPARK_PIN_THREAD``, on by default since Spark 3.2), where each
+    Python thread owns its JVM thread's local properties; with it off,
+    the threads share them and can overwrite each other's (and the
+    caller's) job description.  Each checkpoint is
     pair-rows only (id_a, id_b) — detector tags are constants attached
     after materialization, and every pair set is orders of magnitude
     smaller than the corpus that produced it, so the held intermediate is
     the decision set, not data (guide §8's lightweight-proxy rule).
     """
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
     import knowledgebot_spark.queries_llm as _self
@@ -3852,34 +3858,27 @@ def llm_dedup_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
         ("snm", _self.llm_dedup_sorted_neighborhood),
     ]
 
-    if os.environ.get("KB_OVERLAP_SERIAL") == "1":
+    def _materialize(item):
+        name, fn = item
+        sc = spark.sparkContext
+        sc.setJobDescription(f"overlap_report: {name}")
+        try:
+            # eager localCheckpoint: runs this detector's jobs NOW, on
+            # this thread, concurrently with its three siblings
+            return (
+                name,
+                fn(spark, sf).select("id_a", "id_b").localCheckpoint(),
+            )
+        finally:
+            sc.setJobDescription(None)
+
+    # 4 driver threads = 4 concurrent jobs; FIFO scheduling back-fills
+    # each detector's straggler tail with the next one's tasks (§2.6)
+    with ThreadPoolExecutor(max_workers=len(detectors)) as pool:
         parts = [
-            fn(spark, sf).select("id_a", "id_b", F.lit(name).alias("d"))
-            for name, fn in detectors
+            df.withColumn("d", F.lit(name))
+            for name, df in pool.map(_materialize, detectors)
         ]
-    else:
-
-        def _materialize(item):
-            name, fn = item
-            sc = spark.sparkContext
-            sc.setJobDescription(f"overlap_report: {name}")
-            try:
-                # eager localCheckpoint: runs this detector's jobs NOW, on
-                # this thread, concurrently with its three siblings
-                return (
-                    name,
-                    fn(spark, sf).select("id_a", "id_b").localCheckpoint(),
-                )
-            finally:
-                sc.setJobDescription(None)
-
-        # 4 driver threads = 4 concurrent jobs; FIFO scheduling back-fills
-        # each detector's straggler tail with the next one's tasks (§2.6)
-        with ThreadPoolExecutor(max_workers=len(detectors)) as pool:
-            parts = [
-                df.withColumn("d", F.lit(name))
-                for name, df in pool.map(_materialize, detectors)
-            ]
     tagged = parts[0]
     for p in parts[1:]:
         tagged = tagged.unionByName(p)
@@ -4127,8 +4126,7 @@ def llm_index_delta(spark: SparkSession, sf: str) -> DataFrame:
     )
     best = F.expr(
         "array_sort(transform(cents, s -> struct("
-        "aggregate(zip_with(qv, s.c, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS d, s.cell AS cell)))[0].cell"
+        f"{_sq_dist_bigint('qv', 's.c')} AS d, s.cell AS cell)))[0].cell"
     )
     assigned = q.crossJoin(F.broadcast(cents)).select(
         "vec_id", best.alias("cell")

@@ -946,40 +946,14 @@ def stream_neardup_gate_ttl(spark: SparkSession, sf: str) -> DataFrame:
     return _gate_admission_report(dec)
 
 
-_GATE_LEDGER_PARTS_ENV = "KB_GATE_LEDGER_PARTS"
-_GATE_LEDGER_PARTS_DEFAULT = 64
-_BANDS_PARTS_ENV = "KB_BANDS_PARTITIONS"
-_BANDS_PARTS_DEFAULT = 64
+# partition counts of the bucket-sharded signature ledgers: the gate's
+# base (lp) and the champion bands base
+_GATE_LEDGER_PARTS = 64
+_BANDS_PARTS = 64
 _GATE_COMPACT_EVERY_ENV = "KB_GATE_COMPACT_EVERY"
 _GATE_COMPACT_EVERY_DEFAULT = 16
-
-
-def _gate_ledger_parts() -> int:
-    import os
-
-    return int(
-        os.environ.get(_GATE_LEDGER_PARTS_ENV, str(_GATE_LEDGER_PARTS_DEFAULT))
-    )
-
-
-def _bands_n_parts() -> int:
-    import os
-
-    return int(os.environ.get(_BANDS_PARTS_ENV, str(_BANDS_PARTS_DEFAULT)))
-
-
-def _gate_tail_files() -> int:
-    """Parsed ONCE at query start (ADVICE r13): a malformed or
-    non-positive KB_GATE_TAIL_FILES fails fast with a clear error instead
-    of crashing every gate micro-batch inside foreachBatch."""
-    import os
-
-    raw = os.environ.get("KB_GATE_TAIL_FILES", "1")
-    try:
-        n = int(raw)
-    except ValueError as err:
-        raise ValueError(f"KB_GATE_TAIL_FILES must be an integer, got {raw!r}") from err
-    return max(1, n)
+# files per gate batch's signature append to the ledger tail (see _gate_batch)
+_GATE_TAIL_FILES = 1
 
 
 def _bucket_probe_partition_values(bands: DataFrame, n_lp: int) -> list[str]:
@@ -1006,7 +980,7 @@ def _bucket_probe_partition_values(bands: DataFrame, n_lp: int) -> list[str]:
 def bucket_ledger_fold(
     spark: SparkSession,
     ledger: str,
-    n_lp: int | None = None,
+    n_lp: int = _GATE_LEDGER_PARTS,
     id_col: str = "doc_id",
     expire_below: int | None = None,
 ) -> int:
@@ -1040,8 +1014,6 @@ def bucket_ledger_fold(
     )
     if not files:
         return 0
-    if n_lp is None:
-        n_lp = _gate_ledger_parts()
     n_lp = _ledger_recorded_n_lp(base_dir, n_lp)
     rows = spark.read.parquet(*files).select("band", "bv", id_col)
     base_path = _snapshot_current(base_dir)
@@ -1220,7 +1192,6 @@ def _gate_batch(
     dom_col: str = "doc_id",
     ttl_waves: int | None = None,
     seq_base: int | None = None,
-    tail_files: int | None = None,
 ) -> None:
     """One micro-batch of the near-dup admission gate — module-level so
     the fully-streaming composition (stream_gated_pack_incremental) and
@@ -1245,25 +1216,12 @@ def _gate_batch(
     signatures, so ledger rows are O(window x batch) instead of
     O(corpus).  Exact because each micro-batch is exactly one wave
     (asserted), so one batch-level cutoff equals the per-doc rule."""
-    import os
-    import time
-
     from pyspark.sql import functions as F
 
     from knowledgebot_spark.operators import dedup as dd
 
     sp_sess = batch.sparkSession
     tail_dir, base_dir = f"{ledger}/tail", f"{ledger}/base"
-
-    _debug = bool(os.environ.get("KB_GATE_DEBUG"))
-    _t0 = time.time()
-
-    def _mark(phase: str) -> None:
-        nonlocal _t0
-        if _debug:
-            now = time.time()
-            print(f"  [gate b{batch_id}] {phase}: {now - _t0:.2f}s")
-            _t0 = now
 
     hashed = batch.select(
         dom_col, F.expr(dd.shingle_hash_expr("text")).alias("shingles")
@@ -1307,13 +1265,11 @@ def _gate_batch(
         if ttl_min is not None:
             probe = probe.filter(F.col(dom_col) >= F.lit(ttl_min))
         seen = seen.unionByName(probe.select("band", "bv", dom_col))
-    _mark("probe assemble (base listing + prune literals)")
     if _has_parquet(tail_dir):
         tail = sp_sess.read.parquet(tail_dir)
         if ttl_min is not None:
             tail = tail.filter(F.col(dom_col) >= F.lit(ttl_min))
         seen = seen.unionByName(tail.select("band", "bv", dom_col))
-    _mark("tail listing")
     # dominance via bucket MIN, not a bucket self-join: "blocked iff ANY
     # smaller dom_col shares a bucket" == "bucket min over seen < dom_col"
     # (seen includes the doc itself, so min == dom_col means no smaller
@@ -1336,19 +1292,13 @@ def _gate_batch(
         "source",
         F.coalesce(F.col("is_blocked"), F.lit(False)).alias("is_blocked"),
     )
-    if os.environ.get("KB_GATE_DEBUG") == "2":
-        dec_frame.explain(mode="formatted")
     dec_frame.write.mode("overwrite").parquet(f"{decisions}/tail/batch_id={batch_id}")
-    _mark("probe + decisions write")
     # few-large-files discipline for the per-batch signature append (guide
     # §6): the tail is re-LISTED and re-read by every later batch's probe,
-    # so one file per (batch, KB_GATE_TAIL_FILES) beats one file per cached
-    # partition.  Env-sized for real batch volumes; the coalesce reads the
-    # already-persisted bands, so it adds no recompute.
-    if tail_files is None:  # direct callers (tests) — queries parse once
-        tail_files = _gate_tail_files()
-    bands.coalesce(tail_files).write.mode("append").parquet(tail_dir)
-    _mark("tail append")
+    # so _GATE_TAIL_FILES files per batch beat one file per cached
+    # partition.  The coalesce reads the already-persisted bands, so it
+    # adds no recompute.
+    bands.coalesce(_GATE_TAIL_FILES).write.mode("append").parquet(tail_dir)
     bands.unpersist()
     if compact_every and batch_id > 0 and batch_id % compact_every == 0:
         bucket_ledger_fold(
@@ -1358,7 +1308,6 @@ def _gate_batch(
         # the stream checkpoint, never re-delivered) — fold them on the
         # same cadence so dir count stays bounded (VERDICT r12)
         batch_ledger_fold(sp_sess, decisions, upto=batch_id - 1)
-        _mark("fold")
 
 
 def _neardup_gate_decisions(
@@ -1380,7 +1329,7 @@ def _neardup_gate_decisions(
     cost to the original flat ledger — no shuffle, no partition fan-out
     on the hot path), and every KB_GATE_COMPACT_EVERY batches the tail
     folds into a ``base`` snapshot PARTITIONED BY
-    lp = pmod(xxhash64(band, bv), KB_GATE_LEDGER_PARTS) behind the
+    lp = pmod(xxhash64(band, bv), _GATE_LEDGER_PARTS) behind the
     atomic CURRENT-pointer flip (_snapshot_commit with partition_by).
     Each batch's probe reads: the base PRUNED to partitions that can
     hold one of the batch's own buckets (exact — a colliding row shares
@@ -1398,11 +1347,9 @@ def _neardup_gate_decisions(
     ledger, decisions, ckpt = f"{base}/ledger", f"{base}/decisions", f"{base}/ckpt"
     os.makedirs(f"{ledger}/tail", exist_ok=True)
     os.makedirs(decisions, exist_ok=True)
-    n_lp = _gate_ledger_parts()
     compact_every = int(
         os.environ.get(_GATE_COMPACT_EVERY_ENV, str(_GATE_COMPACT_EVERY_DEFAULT))
     )
-    tail_files = _gate_tail_files()  # fail fast, not per micro-batch
 
     def _gate(batch: DataFrame, batch_id: int) -> None:
         _gate_batch(
@@ -1410,12 +1357,11 @@ def _neardup_gate_decisions(
             batch_id,
             ledger,
             decisions,
-            n_lp,
+            _GATE_LEDGER_PARTS,
             compact_every,
             dom_col,
             ttl_waves=ttl_waves,
             seq_base=_OOO_SEQ_BASE if ttl_waves is not None else None,
-            tail_files=tail_files,
         )
 
     if dom_col == "arrival_seq":
@@ -1757,16 +1703,13 @@ def stream_gated_pack_incremental(spark: SparkSession, sf: str) -> DataFrame:
     os.makedirs(decisions, exist_ok=True)
     os.makedirs(packs_dir, exist_ok=True)
     os.makedirs(state_dir, exist_ok=True)
-    n_lp = _gate_ledger_parts()
     compact_every = int(
         os.environ.get(_GATE_COMPACT_EVERY_ENV, str(_GATE_COMPACT_EVERY_DEFAULT))
     )
-    tail_files = _gate_tail_files()  # fail fast, not per micro-batch
 
     def _gated_pack(batch: DataFrame, batch_id: int) -> None:
         _gate_batch(
-            batch, batch_id, ledger, decisions, n_lp, compact_every,
-            tail_files=tail_files,
+            batch, batch_id, ledger, decisions, _GATE_LEDGER_PARTS, compact_every
         )
         # this batch's own decisions are never folded yet (fold stops at
         # batch_id-1), so the tail subdir read is always live
@@ -1933,11 +1876,11 @@ def _ledger_recorded_n_lp(base_dir: str, n_lp: int) -> int:
     under.  Pruning exactness depends on the probe's literals being
     derived with the SAME n_lp as the fold (lp = pmod(xxhash64(band,
     bv), n_lp) is only a pure function of the bucket when both sides
-    agree on n_lp) — a silent mismatch (env change mid-process, or a
-    caller passing a different value) would drop colliding signatures
-    and admit near-duplicates with no error, so a mismatch raises
-    (ADVICE r12).  Bases folded before meta existed return the caller's
-    value unchanged."""
+    agree on n_lp) — a silent mismatch (a base folded under another
+    partition count, or a caller passing a different value) would drop
+    colliding signatures and admit near-duplicates with no error, so a
+    mismatch raises (ADVICE r12).  Bases folded before meta existed
+    return the caller's value unchanged."""
     meta = _snapshot_meta(base_dir)
     rec = (meta or {}).get("n_lp")
     if rec is None:
@@ -1945,10 +1888,10 @@ def _ledger_recorded_n_lp(base_dir: str, n_lp: int) -> int:
     if int(rec) != int(n_lp):
         raise ValueError(
             f"bucket ledger at {base_dir} was folded with n_lp={rec} but "
-            f"the probe/fold derived n_lp={n_lp} (env changed mid-process, "
-            "or a caller passed a different value) — partition pruning "
-            "would silently drop colliding signatures; rebuild the ledger "
-            "or restore the recorded partition count"
+            f"the probe/fold derived n_lp={n_lp} (folded under another "
+            "partition count, or a caller passed a different value) — "
+            "partition pruning would silently drop colliding signatures; "
+            "rebuild the ledger or restore the recorded partition count"
         )
     return int(rec)
 
@@ -2061,28 +2004,14 @@ def _snapshot_read(spark: SparkSession, table_dir: str) -> DataFrame | None:
 # never happened, so man["gen"] is unchanged), clobbers its own orphans, and
 # commits identical content — idempotent in data, monotone in generation.
 
-_SNAP_SHARDS_ENV = "KB_SNAPSHOT_SHARDS"
-_SNAP_SHARDS_DEFAULT = 16
+_SNAP_SHARDS = 16
 
 # doc_id-keyed partitioning of the docs (verification-features) ledger:
 # the per-batch verify probe reads only partitions that can hold a
 # candidate id, so the probe's SCAN — not just its join width — tracks
 # the candidate set (file-level pruning; at 100 TB raise the count so a
 # partition is a few GB).
-_DOCS_PARTS_ENV = "KB_DOCS_PARTITIONS"
-_DOCS_PARTS_DEFAULT = 16
-
-
-def _snap_n_shards() -> int:
-    import os
-
-    return int(os.environ.get(_SNAP_SHARDS_ENV, str(_SNAP_SHARDS_DEFAULT)))
-
-
-def _docs_n_parts() -> int:
-    import os
-
-    return int(os.environ.get(_DOCS_PARTS_ENV, str(_DOCS_PARTS_DEFAULT)))
+_DOCS_PARTS = 16
 
 
 def _manifest_load(root: str) -> dict | None:
@@ -2356,7 +2285,7 @@ def champion_ledger_compact(spark: SparkSession, base: str) -> dict[str, int]:
 
     out = {"bands": 0, "docs": 0, "edges": 0, "stats": 0}
     out["bands"] = bucket_ledger_fold(
-        spark, f"{base}/bands", _bands_n_parts()
+        spark, f"{base}/bands", _BANDS_PARTS
     )
     if _has_parquet_partitioned(f"{base}/docs"):
         out["docs"] = compact_keyed_table(spark, f"{base}/docs", ("dp",))
@@ -2427,14 +2356,14 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
               append FLAT to bands/tail (no hot-path shuffle), and the
               scheduled compaction folds the tail into a bands/base
               snapshot PARTITIONED BY lp = pmod(xxhash64(band, bv),
-              KB_BANDS_PARTITIONS) behind an atomic CURRENT flip
+              _BANDS_PARTS) behind an atomic CURRENT flip
               (bucket_ledger_fold).  The per-batch collision probe is a
               band/bv-keyed equi-join whose base SCAN prunes to
               partitions that can hold one of the batch's own buckets —
               previously the champion path's last corpus-scale per-batch
               read — plus the bounded tail.
       docs/   (doc_id, shingles, n_chars) PARTITIONED BY
-              pmod(doc_id, KB_DOCS_PARTITIONS) — append-only verification
+              pmod(doc_id, _DOCS_PARTS) — append-only verification
               features.  The ONLY corpus-scale state a batch touches; the
               partition-key filter prunes the probe's SCAN to partitions
               that can hold a candidate, and rows enter joins only
@@ -2448,7 +2377,7 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
               so it is edge-bounded (VERDICT r09 #1: the champion refresh
               reads this, never the docs ledger).
       snap/   the maintained labels + champions tables (sharded by
-              pmod(label, KB_SNAPSHOT_SHARDS)) plus the node-keyed
+              pmod(label, _SNAP_SHARDS)) plus the node-keyed
               index ``nodes`` — the same (node, label) rows sharded by
               pmod(node, ·) so the contraction join reads only shards
               that can hold a batch endpoint (round 11) — committed via
@@ -2467,7 +2396,7 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     label graph (an edge between components, not documents; edges internal
     to one component vanish), the label graph is solved by a driver-side
     union-find (distributed alternating-star past
-    KB_DELTA_CC_DRIVER_MAX), and only members of TOUCHED components
+    _DELTA_CC_DRIVER_MAX), and only members of TOUCHED components
     re-label through one keyed join — untouched components and their
     champion rows carry over verbatim, and the election window runs over
     touched clusters only.  Per-batch merge cost is therefore bounded by
@@ -2497,7 +2426,6 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     idempotent rewrite is the K2 upsert discipline
     (sinks/keyed_parquet.py:56)."""
     import os
-    import time
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -2509,16 +2437,6 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     edges_dir, stats_dir = f"{base}/edges", f"{base}/stats"
     snap_root = f"{base}/snap"
     sp_sess = batch.sparkSession
-
-    _debug = bool(os.environ.get("KB_CHAMPION_DEBUG"))
-    _t0 = time.time()
-
-    def _mark(phase: str) -> None:
-        nonlocal _t0
-        if _debug:
-            now = time.time()
-            print(f"  [champion_maintain b{batch_id}] {phase}: {now - _t0:.2f}s")
-            _t0 = now
 
     hashed = batch.select(
         "doc_id", F.expr(dd.shingle_hash_expr("text")).alias("shingles")
@@ -2532,7 +2450,7 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     seen_bands = bands
     # LSM bucket-sharded ledger (round 12, shared with the near-dup
     # gate): the folded base is PARTITIONED BY lp = pmod(xxhash64(band,
-    # bv), KB_BANDS_PARTITIONS), so the probe SCAN prunes to partitions
+    # bv), _BANDS_PARTS), so the probe SCAN prunes to partitions
     # that can hold one of the batch's own buckets — exact, because a
     # collision shares the (band, bv) bucket and lp is a pure function
     # of it.  This was the champion path's last corpus-scale per-batch
@@ -2542,8 +2460,8 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     bands_base = _snapshot_current(f"{bands_dir}/base")
     if bands_base:
         # probe literals use the n_lp recorded at fold time — a silent
-        # env mismatch would misprune and admit near-dups (ADVICE r12)
-        n_bp = _ledger_recorded_n_lp(f"{bands_dir}/base", _bands_n_parts())
+        # mismatch would misprune and admit near-dups (ADVICE r12)
+        n_bp = _ledger_recorded_n_lp(f"{bands_dir}/base", _BANDS_PARTS)
         lps = _bucket_probe_partition_values(bands, n_bp)
         seen_bands = seen_bands.unionByName(
             sp_sess.read.parquet(bands_base)
@@ -2582,15 +2500,14 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     # verify probe, candidate-pruned BEFORE any shingle enters a join
     # (VERDICT r09 #1): ledger rows survive only through the semi join on
     # candidate ids, so join width tracks candidates, not the corpus; and
-    # because the ledger is PARTITIONED BY pmod(doc_id, KB_DOCS_PARTITIONS)
+    # because the ledger is PARTITIONED BY pmod(doc_id, _DOCS_PARTS)
     # (round 10), the partition-key isin filter prunes the SCAN to
     # partitions that can hold a candidate — a sparse batch reads a few
     # files, not the doc_id spine.  (At 100 TB, raise the partition count;
     # past that, a key-value store is the next step.)
     probe = batch_docs
     if _has_parquet_partitioned(docs_dir):
-        n_dp = _docs_n_parts()
-        dps = _docs_probe_partition_values(cand_ids, n_dp)
+        dps = _docs_probe_partition_values(cand_ids, _DOCS_PARTS)
         probe = (
             sp_sess.read.parquet(docs_dir)
             .filter(F.col("dp").isin(dps))  # file-level partition pruning
@@ -2623,7 +2540,6 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     )
     n_new = new_edges.count()
     new_edges.write.mode("append").parquet(edges_dir)
-    _mark("verify+edges")
     # stats ledger: endpoints of new edges only — edge-bounded by
     # construction, and their n_chars ride along from the verify probe
     # (no extra corpus read)
@@ -2635,7 +2551,6 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     probe.select("doc_id", "n_chars").join(ends, "doc_id", "left_semi").write.mode(
         "append"
     ).parquet(stats_dir)
-    _mark("stats")
     # flat tail append — no shuffle, no partition fan-out on the hot
     # path (a direct lp-partitioned append measured +1.4 s/batch at 10x
     # from the 64-way file fan-out); the scheduled fold below moves the
@@ -2645,9 +2560,8 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     # prune its scan; one file per partition per batch (the bands
     # repartition discipline)
     batch_docs.withColumn(
-        "dp", F.pmod("doc_id", F.lit(_docs_n_parts())).cast("int")
+        "dp", F.pmod("doc_id", F.lit(_DOCS_PARTS)).cast("int")
     ).repartition("dp").write.partitionBy("dp").mode("append").parquet(docs_dir)
-    _mark("bands+docs append")
     bands.unpersist()
     batch_docs.unpersist()
 
@@ -2660,7 +2574,6 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     def _maybe_compact() -> None:
         if every and batch_id and batch_id % every == 0:
             champion_ledger_compact(sp_sess, base)
-            _mark("ledger compaction")
 
     if n_new == 0:
         # nothing can have changed: labels and champions carry over as-is
@@ -2674,10 +2587,15 @@ def _champion_maintain(base: str, batch: DataFrame, batch_id: int) -> None:
     # session's shuffle sizing + AQE coalescing handle the small shuffles —
     # an experiment pinning them to 8 partitions LOST time on the dense
     # stress set, whose touched subgraph is ~1e5 edges)
-    _champion_refresh(sp_sess, new_edges, stats_dir, snap_root, _mark)
+    _champion_refresh(sp_sess, new_edges, stats_dir, snap_root)
     cand.unpersist()
     probe.unpersist()
     _maybe_compact()
+
+
+# contracted label-graph rows above which _champion_refresh solves the
+# delta CC distributed instead of by driver-side union-find
+_DELTA_CC_DRIVER_MAX = 2_000_000
 
 
 def _champion_refresh(
@@ -2685,7 +2603,6 @@ def _champion_refresh(
     new_edges: DataFrame,
     stats_dir: str,
     snap_root: str,
-    _mark,
 ) -> None:
     """Delta-CC + affected-cluster election + ONE sharded manifest commit —
     the edge/label-bounded tail of _champion_maintain.
@@ -2699,7 +2616,7 @@ def _champion_refresh(
     it kills the per-round Spark-job overhead that dominates an
     alternating-star pass at delta scale — with the distributed
     alternating-star as the automatic fallback past
-    KB_DELTA_CC_DRIVER_MAX rows (a batch so dirty its delta graph rivals
+    _DELTA_CC_DRIVER_MAX rows (a batch so dirty its delta graph rivals
     a corpus CC is exactly the case the full algorithm exists for).
     Either solver yields the same (key -> min-id final label) mapping;
     member rows of touched components then re-label through ONE keyed
@@ -2716,14 +2633,12 @@ def _champion_refresh(
     shards containing a touched label / a touched member node are READ
     and REWRITTEN — the per-batch maintained-table I/O is
     |touched shards| x shard size + increment, not the table."""
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from knowledgebot_spark.operators import dedup as dd
 
-    n_shards = _snap_n_shards()
+    n_shards = _SNAP_SHARDS
 
     def _with_shard(df: DataFrame, key: str) -> DataFrame:
         return df.withColumn(
@@ -2746,7 +2661,6 @@ def _champion_refresh(
             .distinct()
             .collect()
         }
-        _mark("contract+merge (bootstrap CC)")
     else:
         # endpoint labels via the NODE-sharded index: only shards that can
         # hold a batch endpoint are read (new_edges is localCheckpointed
@@ -2798,23 +2712,22 @@ def _champion_refresh(
             .filter(F.col("ka") != F.col("kb"))
             .distinct()
         )
-        cap = int(os.environ.get("KB_DELTA_CC_DRIVER_MAX", "2000000"))
         # count first, collect from cache only when under the cap: a
         # limit().collect() here would run CollectLimit's PROGRESSIVE jobs
         # (1, 4, 16... partitions), re-executing the contraction joins per
         # step — measured 6 s of pure re-execution at 10x
         label_edges = label_edges.persist()
         n_label_edges = label_edges.count()
-        edges_local = [] if n_label_edges > cap else label_edges.collect()
-        _mark("label_edges collect")
+        edges_local = (
+            [] if n_label_edges > _DELTA_CC_DRIVER_MAX else label_edges.collect()
+        )
         if n_label_edges == 0:
             label_edges.unpersist()
             # every new edge was internal to an existing component:
             # labels, nodes, stats, and champions are all already correct
             prev_nodes.unpersist()
-            _mark("contract+merge (no-op)")
             return
-        if n_label_edges > cap:
+        if n_label_edges > _DELTA_CC_DRIVER_MAX:
             # a delta graph rivaling a corpus CC: solve it distributed.
             # A contraction key is a previously-committed LABEL exactly
             # when its endpoint row carried one (a_old/b_old): an
@@ -2908,7 +2821,6 @@ def _champion_refresh(
             touched = {k % n_shards for k in old_keys} | {
                 _find(k) % n_shards for k in keys
             }
-        _mark("uf+ship")
         # member rows of touched components re-label through one keyed join,
         # read SHARD-LOCALLY: only shards containing a touched label enter
         prev_t = _manifest_table_read(sp_sess, snap_root, "labels", touched)
@@ -2925,7 +2837,6 @@ def _champion_refresh(
                 F.broadcast(relabel), prev_t.label == relabel.key
             ).select("node", F.col("final").alias("label"))
             merged = moved.unionByName(new_node_rows).persist()
-        _mark("contract+merge")
     # replacement content for the touched label shards: same-shard rows of
     # untouched components verbatim + relabeled members + new nodes
     labels_update = _with_shard(
@@ -3009,12 +2920,10 @@ def _champion_refresh(
             },
             n_shards,
         )
-        _mark("election + sharded manifest commit")
         nodes_update = _with_shard(merged.select("node", "label"), "node")
         _manifest_commit(
             snap_root, {"nodes": (nodes_update, node_shards)}, n_shards
         )
-        _mark("bootstrap nodes index commit")
     else:
         prev_idx = _manifest_table_read(sp_sess, snap_root, "nodes", node_shards)
         if prev_idx is None:
@@ -3032,7 +2941,6 @@ def _champion_refresh(
             },
             n_shards,
         )
-        _mark("election + sharded manifest commit")
     merged.unpersist()
     if prev_t is not None:
         prev_t.unpersist()

@@ -46,14 +46,22 @@ def _escape_partition_value(value) -> str:
     return "".join(out)
 
 
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    if not os.path.exists(path):
-        return False
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
+def _hidden(name: str) -> bool:
+    """Spark's file listing skips these names: commit markers
+    (``_SUCCESS``), staging dirs (``_temporary``, ``.spark-staging-*``)
+    and checksums (``.*.crc``) — but not ``_col=value`` partition dirs."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _has_data_files(path: str) -> bool:
+    """True when ``path`` holds a committed data file, i.e. one Spark's
+    listing would read.  A missing path, an empty directory or one left
+    with only a crashed write's staging files holds none."""
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        if any(not _hidden(f) for f in files):
+            return True
+    return False
 
 
 def upsert_chunks(
@@ -74,7 +82,10 @@ def upsert_chunks(
     if reprocessed_keys is None:
         reprocessed_keys = new_rows.select(key_col).distinct()
 
-    if not _table_exists(spark, path):
+    # first write only when nothing is committed yet; an existing table
+    # is read below, and a failed read raises instead of being mistaken
+    # for "no table" and overwritten
+    if not _has_data_files(path):
         (
             new_rows.write.mode("overwrite")
             .partitionBy(*partition_cols)
@@ -82,11 +93,11 @@ def upsert_chunks(
         )
         return
 
+    existing = spark.read.parquet(path)
     # the batch lineage is referenced several times below (partition-set
     # collect + write); pin it so the upstream DAG runs once
     new_rows = new_rows.persist()
 
-    existing = spark.read.parquet(path)
     # Partition pruning: only partitions containing a reprocessed key are
     # rewritten.  The affected-partition set of one incremental batch is
     # small, so collecting it to build a pruning predicate is driver-cheap

@@ -256,30 +256,32 @@ class micro_batch_confs:
     """Scope session confs to micro-batch-sized work for the duration of
     a foreachBatch stream run (round-13 optimization; guide §2/§6).
 
-    Two confs are scoped, both env-sized for a cluster and restored on
-    exit:
+    Three confs are scoped and restored on exit:
 
-    * ``spark.sql.shuffle.partitions`` -> KB_STREAM_PARTITIONS (8): every
-      per-batch exchange is over a BATCH-sized frame, so the batch-
-      oriented session width (32 locally, O(cores*4) on a cluster) is
-      pure task-scheduling overhead per micro-batch — the same
-      run_to_memory/run_to_parquet state-store rationale, applied to the
-      foreachBatch ledger paths (gate probe agg, minhash agg, cumsum
-      range-repartition).
-    * ``spark.sql.files.minPartitionNum`` -> KB_STREAM_MIN_SPLITS (1):
-      the session floor exists so a SMALL single-file batch TABLE scans
-      wide (session.py); inside a micro-batch the side reads are
-      batch-sized ledger tails and one-batch state dirs, where a 32-way
-      floor turns every tiny read into 32 near-empty tasks (measured
-      64-task union stages per gate batch at sf0.1).  This is only a
-      FLOOR: at real batch sizes ``maxPartitionBytes`` still splits
-      reads, so 1 is the scale-correct value, not a local tune.
+    * ``spark.sql.shuffle.partitions`` -> 8: every per-batch exchange is
+      over a BATCH-sized frame, so the batch-oriented session width (32
+      locally, O(cores*4) on a cluster) is pure task-scheduling overhead
+      per micro-batch — the same run_to_memory/run_to_parquet state-store
+      rationale, applied to the foreachBatch ledger paths (gate probe
+      agg, minhash agg, cumsum range-repartition).
+    * ``spark.sql.files.minPartitionNum`` -> 1: the session floor exists
+      so a SMALL single-file batch TABLE scans wide (session.py); inside
+      a micro-batch the side reads are batch-sized ledger tails and
+      one-batch state dirs, where a 32-way floor turns every tiny read
+      into 32 near-empty tasks (measured 64-task union stages per gate
+      batch at sf0.1).  This is only a FLOOR: at real batch sizes
+      ``maxPartitionBytes`` still splits reads, so 1 is the scale-correct
+      value, not a local tune.
+    * ``spark.sql.adaptive.enabled`` -> false: micro-batch frames are
+      trigger-bounded, so AQE's per-batch re-planning round-trip has
+      nothing to optimize (Spark already refuses AQE for stateful
+      streaming plans).
     """
 
     _PAIRS = {
-        "spark.sql.shuffle.partitions": ("KB_STREAM_PARTITIONS", "8"),
-        "spark.sql.files.minPartitionNum": ("KB_STREAM_MIN_SPLITS", "1"),
-        "spark.sql.adaptive.enabled": ("KB_STREAM_AQE", "false"),
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.files.minPartitionNum": "1",
+        "spark.sql.adaptive.enabled": "false",
     }
 
     def __init__(
@@ -295,7 +297,6 @@ class micro_batch_confs:
     def __enter__(self) -> "micro_batch_confs":
         try:
             for key in self._keys:
-                env, default = self._PAIRS[key]
                 # conf.get(key, None) -> None when the conf is UNSET in this
                 # session (optional confs like files.minPartitionNum on any
                 # session the engine didn't build — the driver's, a
@@ -303,7 +304,7 @@ class micro_batch_confs:
                 # unset", never fed back to conf.set (round-13 regression:
                 # conf.set(key, None) raises IllegalArgumentException).
                 self._before[key] = self._spark.conf.get(key, None)
-                self._spark.conf.set(key, os.environ.get(env, default))
+                self._spark.conf.set(key, self._PAIRS[key])
         except BaseException:
             # roll back whatever was already applied so a partial enter
             # can't leak scoped confs into the shared session
@@ -346,7 +347,7 @@ def run_to_memory(
     the batch-oriented 32 is pure overhead for a local replay.  The count
     is scoped to this query (state partitioning is fixed at the query's
     first batch; fresh memory-sink queries are unaffected by each other)
-    and restored afterwards.  On a cluster, size via KB_STREAM_PARTITIONS.
+    and restored afterwards.
     """
     spark = stream.sparkSession
     name = table or f"mem_{uuid.uuid4().hex[:12]}"
@@ -371,7 +372,7 @@ def run_to_parquet(stream: DataFrame, out_dir: str, ckpt_dir: str) -> DataFrame:
     rewrites exactly its own data (the K2 idempotent-rewrite discipline,
     sinks/keyed_parquet.py:56) and never double-counts, and the sink
     scales with executor-side parquet throughput instead of driver heap.
-    Same KB_STREAM_PARTITIONS state-store scoping as run_to_memory."""
+    Same state-store partition scoping as run_to_memory."""
     spark = stream.sparkSession
 
     def _sink(batch: DataFrame, batch_id: int) -> None:

@@ -14,8 +14,6 @@ plausible year (tests/test_tables.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,8 +54,7 @@ def _canary(df: DataFrame, path: str) -> None:
     plausible year.  pyspark minor bumps have changed parquet timestamp
     reader semantics silently (nanos-as-long -> ntz); this fails loudly at
     load instead of producing 1970-dated windows downstream.  Reads one row
-    from one row group — O(1) regardless of table size; disable with
-    KB_SKIP_TS_CANARY=1 for plan-only contexts."""
+    from one row group — O(1) regardless of table size."""
     row = df.select(F.year("ts").alias("y")).limit(1).collect()
     if row and not (2000 <= row[0].y <= 2100):
         raise AssertionError(
@@ -108,7 +105,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 probe = df.select("ts").limit(1).collect()
                 if probe:
                     df = _events_ts_from_long(df, probe[0].ts)
-            if not os.environ.get("KB_SKIP_TS_CANARY"):
-                _canary(df, path)
+            _canary(df, path)
         _DF_CACHE[key] = df
     return df

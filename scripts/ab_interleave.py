@@ -9,8 +9,8 @@ alike.  Prints a per-round table and per-variant means at the end.
 Usage:
     python scripts/ab_interleave.py --query stream_champion_upsert \
         --rounds 3 --repeats 3 \
-        --variants '[{"name":"scoped","env":{}},
-                     {"name":"noscope","env":{"KB_STREAM_MIN_SPLITS":"32"}}]'
+        --variants '[{"name":"fold16","env":{}},
+                     {"name":"fold4","env":{"KB_LEDGER_COMPACT_EVERY":"4"}}]'
 """
 
 from __future__ import annotations
@@ -48,6 +48,11 @@ def run_once(query: str, sf: str, repeats: int, env: dict[str, str]) -> float:
             f"profile run failed for {env}:\n{proc.stderr[-3000:]}"
         )
     timings = json.loads(proc.stdout.strip().splitlines()[-1])
+    if query not in timings:
+        raise RuntimeError(
+            f"profile run for {env} returned no timing for query {query!r}; "
+            f"see the SKIP line on its stderr:\n{proc.stderr[-3000:]}"
+        )
     return timings[query]
 
 

@@ -36,20 +36,6 @@ def main() -> None:
     from knowledgebot_spark.registry import load
     from knowledgebot_spark.session import get_session
 
-    if os.environ.get("KB_FORCE_EAGER_CKPT") == "1":
-        # A/B hook (round-14 reconciliation of the round-13 lazy-checkpoint
-        # change): force every DataFrame.localCheckpoint back to eager, the
-        # pre-round-13 behaviour, without patching the engine under test.
-        # NOTE: must patch the CONCRETE class — Spark 4 instances are
-        # pyspark.sql.classic.dataframe.DataFrame, whose own method shadows
-        # the abstract pyspark.sql.DataFrame's.
-        from pyspark.sql.classic.dataframe import DataFrame
-
-        _orig_ckpt = DataFrame.localCheckpoint
-        DataFrame.localCheckpoint = (
-            lambda self, eager=True: _orig_ckpt(self, eager=True)
-        )
-
     catalog = load()
     spark = get_session("knowledgebot-profile")
     spark.sparkContext.setLogLevel("ERROR")

@@ -44,3 +44,36 @@ def test_from_env_wires_chunking():
     assert cfg.chunk_overlap == 16
     assert cfg.enable_llm is True
     assert cfg.channels == ["general", "random"]
+
+
+# Every environment name the package reads.  Deployment settings: the
+# reference-config names (config.py) and the session factory's SPARK_*
+# (session.py).  Test-sized knobs: KB_STREAM_MAX_FILES, KB_LEDGER_COMPACT_EVERY,
+# KB_GATE_COMPACT_EVERY, KB_BATCH_FOLD_FILES.  Decided tuning values are
+# module constants, not environment names; add a name here only together
+# with a test that sets it.
+_ENV_ALLOWLIST = {
+    "KB_CHANNELS", "KB_EDIT_CHANNEL", "KB_THREAD_MAX_AGE_DAYS", "KB_ENABLE_LLM",
+    "KB_KEYWORDS_TOP_N", "KB_SUMMARY_MAX_WORDS", "KB_CHUNK_LENGTH",
+    "KB_CHUNK_OVERLAP", "KB_EMBEDDING_DIM", "KB_OUTPUT_PATH", "KB_STATE_PATH",
+    "SPARK_GRAFT_CPUS", "SPARK_MASTER", "SPARK_SHUFFLE_PARTITIONS",
+    "SPARK_MIN_PARTITIONS", "SPARK_GRAFT_AQE", "SPARK_DRIVER_MEMORY",
+    "KB_STREAM_MAX_FILES", "KB_LEDGER_COMPACT_EVERY", "KB_GATE_COMPACT_EVERY",
+    "KB_BATCH_FOLD_FILES",
+}
+
+
+def test_env_surface_is_allowlisted():
+    """The package's KB_*/SPARK_* string literals are exactly the allowlist:
+    a new knob cannot slip in unlisted, and a removed one leaves no reader."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "knowledgebot_spark"
+    literal = re.compile(r"""["']((?:KB|SPARK)_[A-Z0-9_]+)["']""")
+    found = {
+        name
+        for src in pkg.rglob("*.py")
+        for name in literal.findall(src.read_text(encoding="utf-8"))
+    }
+    assert found == _ENV_ALLOWLIST

@@ -196,7 +196,7 @@ def test_manifest_crash_before_flip_is_invisible_and_replayable(spark, tmp_path)
     from knowledgebot_spark import queries_streaming as qs
 
     root = str(tmp_path / "snap")
-    n = qs._snap_n_shards()
+    n = qs._SNAP_SHARDS
 
     def upd(vals, key):
         df = spark.createDataFrame(
@@ -275,7 +275,7 @@ def test_docs_ledger_probe_prunes_partitions(spark, sf_dir, tmp_path):
     candidate partitions opens strictly fewer files than the spine."""
     from knowledgebot_spark.queries_streaming import (
         _champion_maintain,
-        _docs_n_parts,
+        _DOCS_PARTS,
     )
     from knowledgebot_spark.tables import read_table
 
@@ -295,8 +295,8 @@ def test_docs_ledger_probe_prunes_partitions(spark, sf_dir, tmp_path):
     # type was invisible)
     from knowledgebot_spark.queries_streaming import _docs_probe_partition_values
 
-    cand0 = docs.select("doc_id").filter(F.col("doc_id") % _docs_n_parts() == 0)
-    dps = _docs_probe_partition_values(cand0, _docs_n_parts())
+    cand0 = docs.select("doc_id").filter(F.col("doc_id") % _DOCS_PARTS == 0)
+    dps = _docs_probe_partition_values(cand0, _DOCS_PARTS)
     assert dps == ["0"]
     one = ledger.filter(F.col("dp").isin(dps))
     # files ACTUALLY read under the partition filter (inputFiles() lists
@@ -314,7 +314,7 @@ def test_docs_ledger_probe_prunes_partitions(spark, sf_dir, tmp_path):
     assert pf and all("cast(" not in ln.lower() for ln in pf), pf
     # the pruned read still holds exactly the pmod-0 ids
     ids = [r.doc_id for r in one.select("doc_id").collect()]
-    assert ids and all(i % _docs_n_parts() == 0 for i in ids)
+    assert ids and all(i % _DOCS_PARTS == 0 for i in ids)
 
 
 # --- parquet-sink streaming (VERDICT r09 #4) ------------------------------------

@@ -320,7 +320,7 @@ def test_delta_path_never_reads_full_manifest_tables(spark, sf_dir, tmp_path, mo
     assert not full_reads, f"full-table manifest reads on delta path: {full_reads}"
     # the endpoint lookup (first nodes read) is bounded by the batch's
     # own endpoint node shards
-    n = qs._snap_n_shards()
+    n = qs._SNAP_SHARDS
     edges = spark.read.parquet(f"{base}/edges").distinct()
     ep_shards = {
         int(r[0])
@@ -345,7 +345,7 @@ def test_refresh_raises_on_manifest_without_nodes_index(spark, tmp_path):
     from knowledgebot_spark import queries_streaming as qs
 
     root = str(tmp_path / "old_snap")
-    n = qs._snap_n_shards()
+    n = qs._SNAP_SHARDS
     labels = spark.createDataFrame(
         [(1, 1), (2, 1)], "node BIGINT, label BIGINT"
     ).withColumn("_shard", F.pmod(F.col("label"), F.lit(n)).cast("int"))
@@ -359,7 +359,7 @@ def test_refresh_raises_on_manifest_without_nodes_index(spark, tmp_path):
     )
     edges = spark.createDataFrame([(1, 3)], "id_a BIGINT, id_b BIGINT")
     with pytest.raises(ValueError, match="no 'nodes' index"):
-        qs._champion_refresh(spark, edges, str(tmp_path / "stats"), root, lambda s: None)
+        qs._champion_refresh(spark, edges, str(tmp_path / "stats"), root)
 
     # ...and the advertised migration unblocks it: backfill resharding the
     # committed labels, after which the refresh proceeds and contracts the
@@ -375,7 +375,7 @@ def test_refresh_raises_on_manifest_without_nodes_index(spark, tmp_path):
     spark.createDataFrame(
         [(1, 10), (2, 10), (3, 99)], "doc_id BIGINT, n_chars BIGINT"
     ).write.parquet(stats_dir)
-    qs._champion_refresh(spark, edges, stats_dir, root, lambda s: None)
+    qs._champion_refresh(spark, edges, stats_dir, root)
     labels_after = {
         (r.node, r.label)
         for r in qs._manifest_table_read(spark, root, "labels")

@@ -40,7 +40,7 @@ def test_bootstrap_still_commits_nodes_index(spark, sf_dir, tmp_path):
     }
     assert labels and nodes == labels
     # nodes shards really are node-keyed (prunable by endpoint shard)
-    n = qs._snap_n_shards()
+    n = qs._SNAP_SHARDS
     for s in man["tables"]["nodes"]:
         got = qs._manifest_table_read(spark, f"{base}/snap", "nodes", {int(s)})
         if got is None:
@@ -297,7 +297,7 @@ def test_gate_ledger_partition_pruning_and_compaction(spark, sf_dir, tmp_path, m
 
     # a sparse probe prunes: one doc's buckets cover < P partitions, the
     # partition filter is cast-free, and fewer files are actually read
-    n_lp = qs._gate_ledger_parts()
+    n_lp = qs._GATE_LEDGER_PARTS
     one_doc = docs.orderBy("doc_id").limit(1)
     one_bands = dd.lsh_bands(
         dd.with_minhash(
@@ -323,7 +323,7 @@ def test_gate_ledger_partition_pruning_and_compaction(spark, sf_dir, tmp_path, m
 def test_champion_bands_probe_prunes_partitions(spark, sf_dir, tmp_path, monkeypatch):
     """The champion bands ledger shares the gate's LSM discipline (round
     12): the folded base is partitioned by lp = pmod(xxhash64(band, bv),
-    KB_BANDS_PARTITIONS), so the per-batch collision probe — previously
+    _BANDS_PARTS), so the per-batch collision probe — previously
     the champion path's last corpus-scale read — prunes its base scan to
     the batch's own bucket shards, cast-free, via the production literal
     derivation; and maintenance over the folded layout stays correct."""
@@ -365,8 +365,8 @@ def test_champion_bands_probe_prunes_partitions(spark, sf_dir, tmp_path, monkeyp
         ),
         "doc_id",
     )
-    lps = qs._bucket_probe_partition_values(one_bands, qs._bands_n_parts())
-    assert 0 < len(lps) < qs._bands_n_parts()
+    lps = qs._bucket_probe_partition_values(one_bands, qs._BANDS_PARTS)
+    assert 0 < len(lps) < qs._BANDS_PARTS
     pruned = ledger.filter(F.col("lp").isin(lps))
     n_pruned = pruned.select(F.input_file_name()).distinct().count()
     assert 0 < n_pruned < n_all, (n_pruned, n_all)

@@ -426,7 +426,7 @@ def test_ttl_gate_window_and_ledger_expiry(spark, sf_dir, tmp_path):
             w,
             ledger,
             decisions,
-            qs._gate_ledger_parts(),
+            qs._GATE_LEDGER_PARTS,
             compact_every,
             dom_col="arrival_seq",
             ttl_waves=qs._TTL_WAVES,

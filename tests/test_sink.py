@@ -3,6 +3,7 @@ idempotency, tag-removal tombstone, checkpoint pre-scan stamping)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from knowledgebot_spark.sinks.checkpoint import IncrementalRun, load_state, save_state
@@ -247,3 +248,55 @@ def test_tombstone_bool_and_null_partition_values(spark, tmp_path):
     # partition values read back as directory-name strings (partition
     # type inference is pinned off session-wide)
     assert rows == [("K3", "false", "us", "keep")]
+
+
+def test_failed_read_of_existing_table_raises_and_keeps_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A read error on an existing table must propagate, never be taken
+    for "no table yet": the first-write branch overwrites the whole path,
+    so mistaking a transient failure for a missing table wipes every
+    partition the batch does not touch."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    path = str(tmp_path / "chunks")
+    before = [
+        ("C1_1.0", "general", "20250101", 1, "a"),
+        ("C2_2.0", "random", "20250102", 1, "b"),
+    ]
+    upsert_chunks(spark, path, _chunks(spark, before))
+    assert _snapshot(spark, path) == sorted(before)
+
+    orig = DataFrameReader.parquet
+    calls = []
+
+    def flaky_parquet(self, *paths, **options):
+        calls.append(paths)
+        if len(calls) == 1:
+            raise OSError("injected transient read failure")
+        return orig(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", flaky_parquet)
+    batch = _chunks(spark, [("C1_1.0", "general", "20250101", 1, "new-a")])
+    with pytest.raises(OSError, match="injected"):
+        upsert_chunks(spark, path, batch)
+    monkeypatch.undo()
+    assert calls, "the fault was never injected"
+    assert _snapshot(spark, path) == sorted(before)
+
+
+def test_staging_leftovers_take_first_write_branch(spark, tmp_path):
+    """A directory holding only a crashed write's leftovers (``_``- and
+    ``.``-prefixed staging entries, no committed data file) is written
+    fresh, the way Spark's own listing would see it: empty."""
+    import os
+
+    path = tmp_path / "chunks"
+    (path / "_temporary" / "0").mkdir(parents=True)
+    (path / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"partial")
+    (path / ".spark-staging-1").mkdir()
+    (path / ".part-00000.parquet.crc").write_bytes(b"")
+    assert os.listdir(path)
+    rows = [("C1_1.0", "general", "20250101", 1, "a")]
+    upsert_chunks(spark, str(path), _chunks(spark, rows))
+    assert _snapshot(spark, str(path)) == rows
