@@ -58,21 +58,23 @@ def run_extraction(
     )
     # K2: every in-scope message key is reprocessed — deletes run even for
     # messages that no longer (or never) contain a knowledge block.  The
-    # channel inner-join (F6) must apply to the tombstone set too, so that
-    # keys map to real partitions.
-    reprocessed = (
-        ex.enrich_channel(scope, channels).select("msg_key").distinct()
+    # channel inner-join (F6) applies to the tombstone set too, and gives
+    # each key the partition its chunks land in, so the sink needs no
+    # table scan to find it.
+    keyed_scope = ex.enrich_channel(scope, channels).select(
+        "msg_key", "channel_name", ex.msg_date().alias("msg_date")
     )
+    # collected once; through pandas (Arrow) the key frame is a driver-side
+    # LocalRelation, which the sink reads back without running a job
+    targets = keyed_scope.toPandas()
+    reprocessed = spark.createDataFrame(targets, keyed_scope.schema)
 
     upsert_chunks(spark, output_path, chunks, reprocessed_keys=reprocessed)
     run.commit()
 
-    # A3 counters: metadata-cheap — no full-table scan (parquet count()
-    # reads footers only, no data pages)
+    # A3 counters from work already done
     return {
         "checkpoint_before": ckpt,
         "checkpoint_after": run.start_micros,
-        "n_reprocessed_keys": reprocessed.count(),
-        "n_chunks_in_table": spark.read.parquet(output_path).count(),
+        "n_reprocessed_keys": targets["msg_key"].nunique(),
     }
-

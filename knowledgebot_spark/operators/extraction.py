@@ -143,11 +143,17 @@ def resolve_mentions(df: DataFrame, users: DataFrame, text_col: str = "full_text
     return df.join(collected, "msg_key", "left")
 
 
+def msg_date() -> Column:
+    """P4: a message's UTC ``yyyyMMdd`` date — with ``channel_name``, the
+    chunk table partition its chunks and its tombstone both land in."""
+    return F.date_format(F.timestamp_micros(F.col("ts_micros")), "yyyyMMdd")
+
+
 def format_output(df: DataFrame) -> DataFrame:
     """P4-P9 formatting columns (all JVM built-ins, no UDFs)."""
     ts = F.timestamp_micros(F.col("ts_micros"))
     return (
-        df.withColumn("msg_date", F.date_format(ts, "yyyyMMdd"))          # P4
+        df.withColumn("msg_date", msg_date())                              # P4
         .withColumn("pretty_date", F.date_format(ts, "dd MMMM yyyy"))     # P5
         .withColumn("ts_underscored", F.regexp_replace("ts_raw", r"\.", "_"))  # P6
         .withColumn(

@@ -165,8 +165,8 @@ def stream_extraction_spine(spark: SparkSession, sf: str) -> DataFrame:
         keyed = ex.with_msg_key(batch)
         fresh = ex.filter_fresh(keyed, model.CKPT_MICROS, model.LOOKBACK_DAYS)
         chunks = ex.build_knowledge_chunks(fresh, users, channels, members)
-        reprocessed = (
-            ex.enrich_channel(fresh, channels).select("msg_key").distinct()
+        reprocessed = ex.enrich_channel(fresh, channels).select(
+            "msg_key", "channel_name", ex.msg_date().alias("msg_date")
         )
         upsert_chunks(batch.sparkSession, out, chunks, reprocessed_keys=reprocessed)
 

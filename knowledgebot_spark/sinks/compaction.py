@@ -1,14 +1,17 @@
 """Small-file compaction for the keyed parquet sink (SURVEY.md §4 O7).
 
-Every incremental ``upsert_chunks`` run rewrites its affected partitions
-with however many tasks the batch plan produced, so a hot partition
-accretes one-file-per-run.  At 100 TB that is the classic lakehouse
-small-file problem: scan parallelism degrades to file count, footer reads
-dominate, and the NameNode/listing cost grows without bound.  This module
-is the maintenance half of the sink contract: find fragmented partitions
-from directory *metadata* (never data), rewrite ONLY those via dynamic
-partition overwrite, one shuffle keyed on the partition columns so each
-partition lands in exactly one task -> exactly one file.
+``upsert_chunks`` does not fragment a table: its dynamic partition
+overwrite replaces each affected partition's files with one new file.
+Files accrete where rows are appended instead — ``mode("append")``
+ledgers such as the champion pipeline's ``docs/`` — and a hot partition
+then gains a file on every write.  At 100 TB that is the classic
+lakehouse small-file problem: scan parallelism degrades to file count,
+footer reads dominate, and the NameNode/listing cost grows without
+bound.  This module is the maintenance half of the sink contract: find
+fragmented partitions from directory *metadata* (never data), rewrite
+ONLY those via dynamic partition overwrite, one shuffle keyed on the
+partition columns so each partition lands in exactly one task -> exactly
+one file.
 
 The reference has no analogue (it writes one .txt per chunk and never
 compacts — the pathology, not the cure); the compaction policy follows

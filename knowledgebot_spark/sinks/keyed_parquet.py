@@ -10,12 +10,37 @@ Re-expresses the reference's delete-then-rewrite file sink
      `#KNOWLEDGE` filter at :493);
   2. append the new rows.
 
+Targets.  One upsert works from the ``(key, *partition)`` pairs it must
+delete, collected to the driver once; the partition prune predicate and
+the key delete are both built from that list.  The pairs come from one
+of two places:
+
+  * a key frame that carries the partition columns: its rows are the
+    targets, and no existing data is read to find them.  This assumes a
+    key's rows live in the partition its key frame names, which holds
+    when the partition is a function of the key's message, as
+    ``(channel_name, msg_date)`` is for ``run_extraction`` and the
+    streaming spine.  Stored rows of a key in any other partition (say,
+    after a channel rename) are not deleted; pass keys only for such a
+    batch.  Every row of ``new_rows`` must also lie in a partition the
+    frame names, or the overwrite replaces a partition nobody read;
+  * a key-only frame, or none (the keys of ``new_rows``): the keys are
+    looked up in the existing table with a broadcast ``left_semi``, and
+    the partitions of ``new_rows`` are added.
+
+Write.  The survivors of the affected partitions plus the new rows are
+written once, repartitioned by the partition columns (one file per
+affected partition), with dynamic partition overwrite: Spark stages the
+output and, at commit, swaps in only the partitions present in it.  A
+partition whose every row was tombstoned has no row in that output, so
+the swap leaves its old files in place; a listing of the affected
+directories before and after the write (metadata only) finds those
+partitions, and each is rewritten empty.
+
 Scale posture (100 TB): the table is partitioned by
-``(channel_name, msg_date)``; an incremental batch touches only the
-partitions its keys live in, so the rewrite reads + rewrites just those
-partitions via dynamic partition overwrite — never the whole table.  The
-reprocessed keys of one batch are small (one run's messages), so the
-anti-join against existing rows broadcasts the key set.
+``(channel_name, msg_date)`` and an incremental batch reads and rewrites
+only the partitions its keys live in — never the whole table.  The
+driver holds one batch's target pairs.
 """
 
 from __future__ import annotations
@@ -64,6 +89,22 @@ def _has_data_files(path: str) -> bool:
     return False
 
 
+def _partition_dir(path: str, partition_cols: tuple[str, ...], values: tuple) -> str:
+    """The directory Spark writes a partition to (values Hive-escaped)."""
+    return path + "".join(
+        f"/{col}={_escape_partition_value(val)}"
+        for col, val in zip(partition_cols, values)
+    )
+
+
+def _listing(directory: str) -> frozenset[str]:
+    """Names of the data files directly under a partition directory."""
+    try:
+        return frozenset(n for n in os.listdir(directory) if not _hidden(n))
+    except FileNotFoundError:
+        return frozenset()
+
+
 def upsert_chunks(
     spark: SparkSession,
     path: str,
@@ -74,57 +115,53 @@ def upsert_chunks(
 ) -> None:
     """Delete-then-append keyed by ``key_col``.
 
-    ``reprocessed_keys`` is a one-column (key_col) DataFrame of every key
-    whose chunks must be replaced; defaults to the keys present in
-    ``new_rows``.  Pass it explicitly for tag-removal tombstones (keys whose
-    new message text produced zero chunks — K2 semantics).
+    ``reprocessed_keys`` holds every key whose rows must be replaced;
+    defaults to the keys present in ``new_rows``.  Pass it explicitly for
+    tag-removal tombstones (keys whose new message text produced zero
+    rows — K2 semantics).  When it also carries ``partition_cols``, each
+    key's partition is taken from it and the table is not scanned to find
+    it; it must then name every key of ``new_rows``.
     """
-    if reprocessed_keys is None:
-        reprocessed_keys = new_rows.select(key_col).distinct()
-
     # first write only when nothing is committed yet; an existing table
     # is read below, and a failed read raises instead of being mistaken
     # for "no table" and overwritten
     if not _has_data_files(path):
         (
-            new_rows.write.mode("overwrite")
+            new_rows.repartition(*partition_cols)
+            .write.mode("overwrite")
             .partitionBy(*partition_cols)
             .parquet(path)
         )
         return
 
     existing = spark.read.parquet(path)
-    # the batch lineage is referenced several times below (partition-set
-    # collect + write); pin it so the upstream DAG runs once
-    new_rows = new_rows.persist()
 
-    # Partition pruning: only partitions containing a reprocessed key are
-    # rewritten.  The affected-partition set of one incremental batch is
-    # small, so collecting it to build a pruning predicate is driver-cheap
-    # (it is partition *metadata*, not data rows).
-    # Partition values are canonicalized to STRINGS on both sides of every
-    # membership comparison: the read-back side surfaces them as strings
-    # (partitionColumnTypeInference is pinned off), while a new batch
-    # carries native types — comparing raw tuples would make e.g. bigint
-    # (3,) from the batch and string ('3',) from disk look like DIFFERENT
-    # partitions, sending every existing partition down the emptied-rewrite
-    # path and wiping the table (caught by kb_vector_upsert's bigint
-    # bucket key; directory names are strings anyway).  The cast happens
-    # SPARK-side (not Python str()) so it agrees with Spark's own directory
-    # rendering — boolean casts to 'true'/'false' (Python str gives 'True'),
-    # and null stays None here, matched null-safely below and rendered as
-    # __HIVE_DEFAULT_PARTITION__ when a tombstoned directory is addressed.
-    def _canon(df: DataFrame) -> set[tuple[str | None, ...]]:
-        casted = df.select(
-            *[F.col(c).cast("string").alias(c) for c in partition_cols]
+    # Targets: the (key, *partition) pairs this batch deletes, collected
+    # once.  Partition values are canonicalized to STRINGS Spark-side: the
+    # read-back side surfaces them as strings (partitionColumnTypeInference
+    # is pinned off) while a batch carries native types, and Spark's cast
+    # agrees with its own directory rendering (boolean -> 'true', null
+    # stays None and is matched null-safely below).  Comparing raw values
+    # would make bigint 3 and string '3' different partitions and send
+    # every partition down the emptied-rewrite path (kb_vector_upsert's
+    # bigint bucket key caught that).
+    def _keyed(df: DataFrame) -> DataFrame:
+        return df.select(
+            key_col, *[F.col(c).cast("string").alias(c) for c in partition_cols]
         )
-        return {tuple(r) for r in casted.distinct().collect()}
 
-    keyed = existing.join(
-        F.broadcast(reprocessed_keys.select(key_col)), key_col, "left_semi"
-    )
-    affected = _canon(keyed)
-    affected |= _canon(new_rows)
+    if reprocessed_keys is not None and set(partition_cols) <= set(
+        reprocessed_keys.columns
+    ):
+        targets_df = _keyed(reprocessed_keys)
+    else:
+        key_frame = new_rows if reprocessed_keys is None else reprocessed_keys
+        located = existing.join(
+            F.broadcast(key_frame.select(key_col)), key_col, "left_semi"
+        )
+        targets_df = _keyed(located).unionByName(_keyed(new_rows)).distinct()
+    targets = {tuple(r) for r in targets_df.collect()}
+    affected = {t[1:] for t in targets}
     if not affected:
         return
 
@@ -136,41 +173,35 @@ def upsert_chunks(
                 F.lit(val).cast("string")
             )
         part_pred = part_pred | clause
-
-    survivors = (
-        existing.filter(part_pred)
-        .join(F.broadcast(reprocessed_keys.select(key_col)), key_col, "left_anti")
+    # null keys never match a delete (as in an anti join)
+    keys = [t[0] for t in targets if t[0] is not None]
+    survivors = existing.filter(part_pred).filter(
+        F.col(key_col).isNull() | ~F.col(key_col).isin(keys)
     )
     out = survivors.select(
         [F.col(c).cast(new_rows.schema[c].dataType) for c in new_rows.columns]
-    ).unionByName(new_rows).persist()
+    ).unionByName(new_rows)
 
-    # Materialize the output partition set BEFORE the overwrite — `out`'s
-    # lineage reads the files the write replaces, so it must not be
-    # re-evaluated afterwards (persist also makes the write a cache read).
-    out_parts = _canon(out)
-
-    # Dynamic partition overwrite: only the partitions present in `out`
-    # (== the affected set) are replaced; everything else is untouched.
+    # Dynamic partition overwrite: the job stages its output and, at
+    # commit, replaces only the partitions present in `out` (== the
+    # affected set); one hash shuffle on the partition columns writes each
+    # of them as one file.  `out` reads the files it replaces, so this
+    # write is its only execution.
+    dirs = [_partition_dir(path, partition_cols, v) for v in affected]
+    before = {d: _listing(d) for d in dirs}
     (
-        out.write.mode("overwrite")
+        out.repartition(*partition_cols)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(path)
     )
     # A partition whose every row was tombstoned has no rows in `out`, so
-    # dynamic overwrite leaves its stale files; rewrite it empty explicitly
-    # (partition values Hive-escaped to address the real directory).
-    emptied = [p for p in affected if p not in out_parts]
-    for values in emptied:
-        subdir = path + "".join(
-            f"/{col}={_escape_partition_value(val)}"
-            for col, val in zip(partition_cols, values)
-        )
-        empty = spark.createDataFrame([], out.drop(*partition_cols).schema)
-        empty.write.mode("overwrite").parquet(subdir)
-    out.unpersist()
-    new_rows.unpersist()
+    # the overwrite left its files as they were; rewrite it empty.
+    for d, files in before.items():
+        if files and _listing(d) == files:
+            empty = spark.createDataFrame([], out.drop(*partition_cols).schema)
+            empty.write.mode("overwrite").parquet(d)
 
 
 def serialize_chunk_files(df: DataFrame) -> DataFrame:

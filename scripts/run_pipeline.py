@@ -62,7 +62,11 @@ def main() -> None:
         state_path=f"{WORKDIR}/state.json",
         now_micros=model.CKPT_MICROS + 365 * 86400 * 1_000_000,
     )
-    print(f"[E1] extraction: {counters} ({time.time() - t0:.1f}s)")
+    print(
+        f"[E1] extraction: {counters['n_reprocessed_keys']} keys reprocessed, "
+        f"checkpoint {counters['checkpoint_before']} -> "
+        f"{counters['checkpoint_after']} ({time.time() - t0:.1f}s)"
+    )
 
     # ---- E2: serialize -> glob scan -> parse -> chunk -> embed -> D5 ----
     t0 = time.time()

@@ -30,19 +30,21 @@ def _snapshot(spark, path):
 
 
 def _fragment(spark, path):
-    """Three incremental runs against the same two partitions -> multiple
-    files per partition (each run's rewrite emits its own files)."""
+    """Three partitioned appends to the same two partitions -> multiple
+    files per partition (each append adds its own files; the keyed sink's
+    dynamic overwrite would replace them instead)."""
     for i in range(3):
-        upsert_chunks(
-            spark,
-            path,
+        (
             _chunks(
                 spark,
                 [
                     (f"C1_{i}.0", "general", "20250101", 1, f"a{i}"),
                     (f"C2_{i}.0", "rand/om", "20250102", 1, f"b{i}"),
                 ],
-            ),
+            )
+            .write.mode("append")
+            .partitionBy("channel_name", "msg_date")
+            .parquet(path)
         )
 
 

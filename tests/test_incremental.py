@@ -69,6 +69,7 @@ def test_incremental_runs_and_edit_reprocessing(spark, dims, tmp_path):
     stats = _run(spark, dims, rows1, out, state, now_days=10)
     assert stats["checkpoint_before"] == 0
     assert stats["checkpoint_after"] == 10 * DAY
+    assert stats["n_reprocessed_keys"] == 3
     table = spark.read.parquet(out)
     assert {r.msg_key for r in table.select("msg_key").collect()} == {
         "C1_8.000000", "C1_9.000000"
@@ -87,6 +88,8 @@ def test_incremental_runs_and_edit_reprocessing(spark, dims, tmp_path):
     rows2[1] = _msg(9, "C1", "#KNOWLEDGE nine-v2 #END", user="U000002")
     stats2 = _run(spark, dims, rows2, out, state, now_days=12)
     assert stats2["checkpoint_before"] == 10 * DAY
+    # the two new messages plus the #EDIT parent they reopened (msg 9)
+    assert stats2["n_reprocessed_keys"] == 3
     table = spark.read.parquet(out)
     got = {r.msg_key: r.content for r in table.select("msg_key", "content").collect()}
     # msg 8 untouched (old run's output preserved), 9 replaced, 11 added

@@ -182,8 +182,8 @@ def test_cc_lazy_checkpoint_one_job_per_round(spark, monkeypatch):
 
         orig = DataFrame.localCheckpoint
 
-        def eager_ckpt(self, eager=True):
-            return orig(self, eager=True)
+        def eager_ckpt(self, eager=True, storageLevel=None):
+            return orig(self, eager=True, storageLevel=storageLevel)
 
         monkeypatch.setattr(DataFrame, "localCheckpoint", eager_ckpt)
         eager_jobs = _count_jobs("cc-eager-job-audit")

@@ -3,6 +3,8 @@ idempotency, tag-removal tombstone, checkpoint pre-scan stamping)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -131,8 +133,6 @@ def test_checkpoint_default_missing_and_corrupt(tmp_path):
     state_dir = str(tmp_path / "state")
     assert load_state(state_dir) == {"last_run_timestamp": 0}
     # corrupt file -> default (KnowledgeBot.py:145-155)
-    import os
-
     os.makedirs(state_dir, exist_ok=True)
     with open(f"{state_dir}/state.json", "w") as fh:
         fh.write("{not json")
@@ -289,8 +289,6 @@ def test_staging_leftovers_take_first_write_branch(spark, tmp_path):
     """A directory holding only a crashed write's leftovers (``_``- and
     ``.``-prefixed staging entries, no committed data file) is written
     fresh, the way Spark's own listing would see it: empty."""
-    import os
-
     path = tmp_path / "chunks"
     (path / "_temporary" / "0").mkdir(parents=True)
     (path / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"partial")
@@ -300,3 +298,115 @@ def test_staging_leftovers_take_first_write_branch(spark, tmp_path):
     rows = [("C1_1.0", "general", "20250101", 1, "a")]
     upsert_chunks(spark, str(path), _chunks(spark, rows))
     assert _snapshot(spark, str(path)) == rows
+
+
+def _data_files(path):
+    """Partition directory -> number of parquet data files in it."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        n = sum(1 for f in files if f.endswith(".parquet"))
+        if n:
+            out[os.path.relpath(root, path)] = n
+    return out
+
+
+def test_upsert_writes_one_file_per_affected_partition(spark, tmp_path):
+    """Each write lands one file per partition it touches, however many
+    tasks produced the rows — the merge branch rewrites an affected
+    partition from its survivors AND the new rows, which come from
+    different scans."""
+    path = str(tmp_path / "chunks")
+    first = [(f"C1_{i}.0", "general", "20250101", 1, f"a{i}") for i in range(6)]
+    first += [(f"C2_{i}.0", "random", "20250102", 1, f"b{i}") for i in range(6)]
+    first += [("C3_1.0", "cold", "20250103", 1, "cold")]
+    upsert_chunks(spark, path, _chunks(spark, first).repartition(4))
+    assert set(_data_files(path).values()) == {1}
+
+    cold_dir = "channel_name=cold/msg_date=20250103"
+    cold_before = sorted(os.listdir(os.path.join(path, cold_dir)))
+    batch = [
+        ("C1_0.0", "general", "20250101", 1, "new-a0"),
+        ("C1_9.0", "general", "20250101", 1, "added"),
+        ("C2_0.0", "random", "20250102", 1, "new-b0"),
+        ("C4_1.0", "fresh", "20250104", 1, "new-partition"),
+    ]
+    upsert_chunks(spark, path, _chunks(spark, batch).repartition(4))
+    assert _data_files(path) == {
+        "channel_name=general/msg_date=20250101": 1,
+        "channel_name=random/msg_date=20250102": 1,
+        "channel_name=fresh/msg_date=20250104": 1,
+        cold_dir: 1,
+    }
+    assert sorted(os.listdir(os.path.join(path, cold_dir))) == cold_before
+    want = {r[0]: r for r in first}
+    want.update({r[0]: r for r in batch})
+    assert _snapshot(spark, path) == sorted(want.values())
+
+
+def _rows_read(spark, group, action):
+    """Input records of every stage the jobs of ``action`` ran, read from
+    the status store through a job group of their own."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    total = 0
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        for stage in sc.statusTracker().getJobInfo(job).stageIds:
+            try:
+                total += store.lastStageAttempt(stage).inputRecords()
+            except Exception:  # skipped stage: never ran, read nothing
+                pass
+    return total
+
+
+def test_partition_keyed_upsert_reads_no_unaffected_partition(spark, tmp_path):
+    """With a key frame that names each key's partition, the upsert reads
+    only the affected partitions: the 1000 rows of a cold partition are
+    never scanned to look keys up."""
+    path = str(tmp_path / "chunks")
+    cold = [(f"C9_{i}.0", "cold", "20240101", 1, "x") for i in range(1000)]
+    hot = [
+        ("C1_1.0", "general", "20250101", 1, "old"),
+        ("C1_2.0", "general", "20250101", 1, "keep"),
+    ]
+    upsert_chunks(spark, path, _chunks(spark, cold + hot))
+
+    batch = _chunks(spark, [("C1_1.0", "general", "20250101", 1, "new")])
+    keys = spark.createDataFrame(
+        [("C1_1.0", "general", "20250101")],
+        "msg_key string, channel_name string, msg_date string",
+    )
+    read = _rows_read(
+        spark,
+        "keyed-upsert-read-audit",
+        lambda: upsert_chunks(spark, path, batch, reprocessed_keys=keys),
+    )
+    assert read <= len(hot), f"read {read} rows; the affected partition holds {len(hot)}"
+    assert _snapshot(spark, path) == sorted(
+        cold + [("C1_1.0", "general", "20250101", 1, "new"), hot[1]]
+    )
+
+
+def test_partition_keyed_tombstone_can_empty_a_partition(spark, tmp_path):
+    path = str(tmp_path / "chunks")
+    upsert_chunks(
+        spark,
+        path,
+        _chunks(
+            spark,
+            [
+                ("C1_1.0", "general", "20250101", 1, "only-row-in-part"),
+                ("C2_2.0", "random", "20250102", 1, "keep"),
+            ],
+        ),
+    )
+    keys = spark.createDataFrame(
+        [("C1_1.0", "general", "20250101")],
+        "msg_key string, channel_name string, msg_date string",
+    )
+    upsert_chunks(spark, path, _chunks(spark, []), reprocessed_keys=keys)
+    assert _snapshot(spark, path) == [("C2_2.0", "random", "20250102", 1, "keep")]
