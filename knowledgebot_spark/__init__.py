@@ -13,7 +13,6 @@ text analysis, multimodal columns) designed for 100 TB scale.
 Layout:
     session.py    SparkSession factory (UTC, AQE, arrow)
     config.py     typed engine config (mirrors reference Config/Schema.py)
-    schemas.py    StructType declarations for the pipeline datasets D1-D6
     tables.py     testdata table loaders
     model.py      deterministic Slack-like model derived from the testdata
     registry.py   query catalog: name -> (spark fn, oracle SQL)

@@ -57,13 +57,10 @@ def run_extraction(
         scope, users, channels, members, ckpt_micros=None
     )
     # K2: every in-scope message key is reprocessed — deletes run even for
-    # messages that no longer (or never) contain a knowledge block.  The
-    # channel inner-join (F6) applies to the tombstone set too, and gives
-    # each key the partition its chunks land in, so the sink needs no
+    # messages that no longer (or never) contain a knowledge block.  Each
+    # key carries the partition its chunks land in, so the sink needs no
     # table scan to find it.
-    keyed_scope = ex.enrich_channel(scope, channels).select(
-        "msg_key", "channel_name", ex.msg_date().alias("msg_date")
-    )
+    keyed_scope = ex.tombstone_targets(scope, channels)
     # collected once; through pandas (Arrow) the key frame is a driver-side
     # LocalRelation, which the sink reads back without running a job
     targets = keyed_scope.toPandas()

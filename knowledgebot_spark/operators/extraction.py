@@ -149,6 +149,16 @@ def msg_date() -> Column:
     return F.date_format(F.timestamp_micros(F.col("ts_micros")), "yyyyMMdd")
 
 
+def tombstone_targets(msgs: DataFrame, channels: DataFrame) -> DataFrame:
+    """K2 targets: ``(msg_key, channel_name, msg_date)`` of every message
+    in scope, knowledge block or not — the keys whose stored chunks an
+    upsert replaces, each with the partition its chunks land in.  The
+    channel inner join (F6) applies to the tombstone set too."""
+    return enrich_channel(msgs, channels).select(
+        "msg_key", "channel_name", msg_date().alias("msg_date")
+    )
+
+
 def format_output(df: DataFrame) -> DataFrame:
     """P4-P9 formatting columns (all JVM built-ins, no UDFs)."""
     ts = F.timestamp_micros(F.col("ts_micros"))

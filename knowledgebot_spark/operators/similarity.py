@@ -1,10 +1,15 @@
 """Similarity search over embedding columns (SURVEY.md §2.1 Q1/Q2 + north
 star ANN requirement).
 
-  * exact top-k  — cosine score via JVM built-ins (zip_with/aggregate,
-    computed left-to-right so results are bit-identical to the DuckDB
-    oracle), then orderBy(desc).limit(k) — planner emits
-    TakeOrderedAndProject, never a global sort.
+  * one scorer   — ``cosine_col`` is the only cosine expression in the
+    engine: JVM built-ins (zip_with/aggregate, folded left-to-right so
+    results are bit-identical to the DuckDB oracle) over optional
+    precomputed norm columns.  The query reaches it in one of two forms:
+    a one-row frame broadcast into a cross join (``topk_cosine``), or
+    a literal spliced into the expression (``array_literal``; ``ivf_topk``
+    and the RAG search).
+  * exact top-k  — ``topk_cosine``: score, then orderBy(desc).limit(k) —
+    planner emits TakeOrderedAndProject, never a global sort.
   * LSH top-k    — random-hyperplane signature buckets: candidates share
     the query's bucket, exact scoring only inside the bucket.  The
     hyperplanes are seeded literals so plans are reproducible and
@@ -51,25 +56,26 @@ def norm_expr(vec_col: str) -> str:
     )
 
 
-def cosine_col(a: str, b: str) -> Column:
-    # try_divide: an all-zero vector is legal input and has norm 0; ANSI
-    # mode (Spark 4 default) aborts the JOB on double /0, so zero vectors
-    # score NULL instead (ordered last by every top-k here — i.e. excluded).
-    # Non-zero vectors are bit-identical to the plain division.
-    return F.expr(
-        f"try_divide({dot_expr(a, b)}, ({norm_expr(a)}) * ({norm_expr(b)}))"
-    )
+def cosine_col(a: str, b: str, na: str | None = None, nb: str | None = None) -> Column:
+    """The one cosine scorer: a per-pair dot over norm columns ``na`` and
+    ``nb`` (SQL expressions; default ``norm_expr(a)``, ``norm_expr(b)``).
 
-
-def cosine_prenorm_col(a: str, b: str, na: str, nb: str) -> Column:
-    """Cosine from a per-pair dot and PRE-COMPUTED per-vector norm columns
-    (``norm_expr`` applied before the pairwise join).  Bit-identical to
-    ``cosine_col`` — the same folds over the same doubles, the norm fold
-    just runs once per VECTOR instead of once per PAIR.  Matters because
+    Pass a norm computed once per vector wherever a vector meets many
+    others (``norm_expr`` applied before a pairwise join, a query norm
+    folded on the one-row side or driver-side): the result is
+    bit-identical — the same folds over the same doubles — but
     higher-order functions evaluate interpreted (outside whole-stage
-    codegen): in a blocked pairwise join the fold is the hot loop, and
-    this cuts it from three folds per pair to one."""
-    return F.expr(f"try_divide({dot_expr(a, b)}, {na} * {nb})")
+    codegen), so in a pairwise join the fold is the hot loop, and
+    prenormed it is one fold per pair instead of three.
+
+    try_divide: an all-zero vector is legal input and has norm 0; ANSI
+    mode (Spark 4 default) aborts the JOB on double /0, so zero vectors
+    score NULL instead (ordered last by every top-k here — i.e.
+    excluded).  Non-zero vectors are bit-identical to the plain division.
+    """
+    na = norm_expr(a) if na is None else na
+    nb = norm_expr(b) if nb is None else nb
+    return F.expr(f"try_divide({dot_expr(a, b)}, ({na}) * ({nb}))")
 
 
 def array_literal(values: list[float]) -> str:
@@ -101,7 +107,7 @@ def topk_cosine(
     q = query.withColumn("qn", F.expr(norm_expr("qvec")))
     scored = emb.crossJoin(F.broadcast(q)).withColumn(
         "score",
-        F.round(cosine_prenorm_col(vec_col, "qvec", norm_expr(vec_col), "qn"), 6),
+        F.round(cosine_col(vec_col, "qvec", nb="qn"), 6),
     )
     return (
         scored.select(id_col, "score")
@@ -172,13 +178,7 @@ def ivf_topk(
     qn0 = math.sqrt(sum(x * x for x in qv))
     scored = cand.withColumn(
         "score",
-        F.round(
-            F.expr(
-                f"try_divide({dot_expr(vec_col, qlit)}, "
-                f"({norm_expr(vec_col)}) * CAST({qn0!r} AS DOUBLE))"
-            ),
-            6,
-        ),
+        F.round(cosine_col(vec_col, qlit, nb=f"CAST({qn0!r} AS DOUBLE)"), 6),
     )
     return scored.select(id_col, "cell", "score").orderBy(
         F.desc("score"), F.asc(id_col)

@@ -262,7 +262,7 @@ def llm_dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
         F.col("nrm").alias("nb"),
     )
     joined = a.join(b, ["label", "sub"]).filter(F.col("id_a") < F.col("id_b"))
-    cos = sim.cosine_prenorm_col("va", "vb", "na", "nb")
+    cos = sim.cosine_col("va", "vb", "na", "nb")
     return (
         joined.withColumn("cos_raw", cos)
         .filter(F.col("cos_raw") >= 0.3)
@@ -308,14 +308,9 @@ def llm_sim_filtered(spark: SparkSession, sf: str) -> DataFrame:
     """Q2: metadata filter BEFORE scoring (predicate-first, then top-k)."""
     e = _t(spark, sf, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    scored = (
-        e.filter(F.col("label") == 3)
-        .crossJoin(F.broadcast(q))
-        .withColumn("score", F.round(sim.cosine_col("embedding", "qvec"), 6))
-    )
-    return scored.select("vec_id", "label", "score").orderBy(
-        F.desc("score"), F.asc("vec_id")
-    ).limit(5)
+    top = sim.topk_cosine(e.filter(F.col("label") == 3), q, k=5)
+    # every candidate passed the filter, so its label is the constant
+    return top.select("vec_id", F.lit(3).alias("label"), "score")
 
 
 def _duck_bucket(vec: str, planes: list[list[float]] | None = None) -> str:
@@ -354,13 +349,10 @@ def llm_sim_lsh(spark: SparkSession, sf: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qvec"), F.col("bkt").alias("qbkt")
     )
-    cands = e.join(F.broadcast(q), e.bkt == q.qbkt).filter(F.col("vec_id") != 0)
-    return (
-        cands.withColumn("score", F.round(sim.cosine_col("embedding", "qvec"), 6))
-        .select("vec_id", "score")
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(5)
+    cands = e.join(F.broadcast(q), e.bkt == q.qbkt, "left_semi").filter(
+        F.col("vec_id") != 0
     )
+    return sim.topk_cosine(cands, q.select("qvec"), k=5)
 
 
 # --- text analysis -----------------------------------------------------------
@@ -921,12 +913,7 @@ def llm_sim_ivf(spark: SparkSession, sf: str) -> DataFrame:
         .crossJoin(F.broadcast(q.withColumn("qn", F.expr(sim.norm_expr("qvec")))))
         .withColumn(
             "exact_score",
-            F.round(
-                sim.cosine_prenorm_col(
-                    "embedding", "qvec", sim.norm_expr("embedding"), "qn"
-                ),
-                6,
-            ),
+            F.round(sim.cosine_col("embedding", "qvec", nb="qn"), 6),
         )
         .select("vec_id", "exact_score")
     )
@@ -1918,10 +1905,10 @@ def llm_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
     # NULL scores (zero-norm pairs) must be dropped BEFORE ranking:
     # row_number would otherwise promote arbitrary NULLS-LAST rows into the
     # k=3 cut as phantom edges (and feed them to PageRank as real mass).
-    # Norms are precomputed per vector (cosine_prenorm_col): bit-identical
+    # Norms are precomputed per vector (cosine_col's na/nb): bit-identical
     # scores, one interpreted fold per pair instead of three.
     scored = pairs.withColumn(
-        "score", F.round(sim.cosine_prenorm_col("va", "vb", "na", "nb"), 6)
+        "score", F.round(sim.cosine_col("va", "vb", "na", "nb"), 6)
     ).filter(F.col("score").isNotNull())
     w = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("nbr_id"))
     return (
@@ -2333,19 +2320,11 @@ def kb_rag_search(spark: SparkSession, sf: str) -> DataFrame:
     emb_expr = "array(" + ", ".join(
         f"(s{j} * 1000) div n" for j in range(_RAG_DIM)
     ) + ")"
-    qvec = _query_embedding_micro(_RAG_QUERY)
-    qlit = "array(" + ", ".join(f"CAST({v} AS DOUBLE)" for v in qvec) + ")"
-    scored = sums.selectExpr(
+    qlit = sim.array_literal(_query_embedding_micro(_RAG_QUERY))
+    scored = sums.select(
         "doc_id",
         "chunk_pos",
-        f"""round(
-          aggregate(zip_with({emb_expr}, {qlit}, (x, y) -> CAST(x AS DOUBLE) * y),
-                    CAST(0 AS DOUBLE), (a, v) -> a + v)
-          / (sqrt(aggregate(transform({emb_expr}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                            CAST(0 AS DOUBLE), (a, v) -> a + v))
-             * sqrt(aggregate(transform({qlit}, x -> x * x),
-                              CAST(0 AS DOUBLE), (a, v) -> a + v))),
-          6) AS score""",
+        F.round(sim.cosine_col(emb_expr, qlit), 6).alias("score"),
     )
     return scored.orderBy(F.desc("score"), "doc_id", "chunk_pos").limit(5)
 
@@ -2719,7 +2698,7 @@ def llm_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     pairs = (
         a.join(b, ["bkt", "sub"])
         .filter(F.col("la") != F.col("lb"))
-        .withColumn("cos_raw", sim.cosine_prenorm_col("va", "vb", "na", "nb"))
+        .withColumn("cos_raw", sim.cosine_col("va", "vb", "na", "nb"))
     )
     w = Window.partitionBy("anchor_id").orderBy(F.desc("cos_raw"), F.asc("neg_id"))
     return (
@@ -3544,7 +3523,7 @@ def llm_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     )
     scored = base.crossJoin(F.broadcast(q)).withColumn(
         "rel",
-        F.round(sim.cosine_prenorm_col("embedding", "qvec", "nrm", "qn"), 6),
+        F.round(sim.cosine_col("embedding", "qvec", "nrm", "qn"), 6),
     )
     pool = (
         scored.orderBy(F.desc("rel"), F.asc("vec_id"))
@@ -3582,7 +3561,7 @@ def llm_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
             remaining.crossJoin(F.broadcast(sel))
             .withColumn(
                 "sim",
-                sim.cosine_prenorm_col("embedding", "s_emb", "nrm", "s_nrm"),
+                sim.cosine_col("embedding", "s_emb", "nrm", "s_nrm"),
             )
             .groupBy("vec_id")
             .agg(
@@ -5136,7 +5115,7 @@ def llm_semdedup(spark: SparkSession, sf: str) -> DataFrame:
         a.join(b, ["cid", "sub"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cos", F.round(sim.cosine_prenorm_col("ea", "eb", "na", "nb"), 6)
+            "cos", F.round(sim.cosine_col("ea", "eb", "na", "nb"), 6)
         )
         .filter(F.col("cos") >= _SEMDEDUP_TAU)
     )

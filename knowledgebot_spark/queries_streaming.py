@@ -148,7 +148,6 @@ def stream_extraction_spine(spark: SparkSession, sf: str) -> DataFrame:
 
     from knowledgebot_spark import model
     from knowledgebot_spark.operators import extraction as ex
-    from knowledgebot_spark.sinks.keyed_parquet import upsert_chunks
 
     base = _run_base("stream_e2e", sf)  # per-run unique dir (ADVICE r09)
     src, out, ckpt = f"{base}/messages", f"{base}/chunks", f"{base}/ckpt"
@@ -159,23 +158,18 @@ def stream_extraction_spine(spark: SparkSession, sf: str) -> DataFrame:
     channels = model.channels_dim(spark, sf)
     members = model.members(spark, sf)
 
-    stream = spark.readStream.schema(msgs.schema).parquet(src)
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        keyed = ex.with_msg_key(batch)
-        fresh = ex.filter_fresh(keyed, model.CKPT_MICROS, model.LOOKBACK_DAYS)
-        chunks = ex.build_knowledge_chunks(fresh, users, channels, members)
-        reprocessed = ex.enrich_channel(fresh, channels).select(
-            "msg_key", "channel_name", ex.msg_date().alias("msg_date")
-        )
-        upsert_chunks(batch.sparkSession, out, chunks, reprocessed_keys=reprocessed)
-
+    stream = ex.filter_fresh(
+        ex.with_msg_key(spark.readStream.schema(msgs.schema).parquet(src)),
+        model.CKPT_MICROS,
+        model.LOOKBACK_DAYS,
+    )
     with sp.micro_batch_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        q = sp.foreach_batch_upsert(
+            stream,
+            out,
+            ckpt,
+            transform=lambda b: ex.build_knowledge_chunks(b, users, channels, members),
+            reprocessed_keys_fn=lambda b: ex.tombstone_targets(b, channels),
         )
         q.awaitTermination()
     return spark.read.parquet(out).selectExpr(*_SPINE_COLS.split(", "))

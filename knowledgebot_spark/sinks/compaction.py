@@ -23,32 +23,31 @@ untouched.
 from __future__ import annotations
 
 import os
-import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from knowledgebot_spark.sinks.keyed_parquet import DEFAULT_PARTITIONS
-
-_PCT = re.compile(r"%([0-9A-F]{2})")
-
-
-def _unescape_partition_value(value: str) -> str:
-    """Inverse of Hive escapePathName (keyed_parquet._escape_partition_value):
-    '%' itself is always escaped as %25, so the decode is unambiguous."""
-    return _PCT.sub(lambda m: chr(int(m.group(1), 16)), value)
+from knowledgebot_spark.sinks.keyed_parquet import (
+    DEFAULT_PARTITIONS,
+    _hidden,
+    _partition_predicate,
+    _unescape_partition_value,
+)
 
 
 def partition_file_counts(
     path: str, partition_cols: tuple[str, ...] = DEFAULT_PARTITIONS
 ) -> dict[tuple, int]:
     """(partition values) -> number of data files, from a driver-side
-    directory walk.  This is partition METADATA (dir names + file counts),
+    directory walk (values decoded from the directory names; a null
+    partition is ``None``; data files are the names Spark's listing
+    reads).  This is partition METADATA (dir names + file counts),
     the same listing any table format keeps in its manifest — never row
     data; cost is O(partitions + files), not O(rows)."""
     counts: dict[tuple, int] = {}
     depth = len(partition_cols)
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
         rel = os.path.relpath(root, path)
         if rel == ".":
             continue
@@ -65,7 +64,7 @@ def partition_file_counts(
             values.append(_unescape_partition_value(comp[len(prefix):]))
         if not ok:
             continue
-        n = sum(1 for f in files if f.endswith(".parquet"))
+        n = sum(1 for f in files if not _hidden(f))
         if n:
             counts[tuple(values)] = n
     return counts
@@ -90,14 +89,9 @@ def compact_keyed_table(
     if not fragmented:
         return 0
 
-    pred = F.lit(False)
-    for values in fragmented:
-        clause = F.lit(True)
-        for col, val in zip(partition_cols, values):
-            clause = clause & (F.col(col) == F.lit(val))
-        pred = pred | clause
-
-    rows = spark.read.parquet(path).filter(pred)
+    rows = spark.read.parquet(path).filter(
+        _partition_predicate(partition_cols, fragmented)
+    )
     # One hash shuffle on the partition key: every partition tuple maps to
     # exactly one task, so the writer emits exactly one file per partition.
     (

@@ -46,8 +46,9 @@ driver holds one batch's target pairs.
 from __future__ import annotations
 
 import os
+import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_PARTITIONS = ("channel_name", "msg_date")
@@ -56,12 +57,14 @@ DEFAULT_PARTITIONS = ("channel_name", "msg_date")
 # in partition directory names — hand-built paths must match or a tombstone
 # rewrite targets the wrong directory.
 _ESCAPE_CHARS = set('"#%\'*/:=?\\{[]^')  # note: '}' is NOT escaped by Spark
+# Spark writes null partition values to this sentinel directory.
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_PCT = re.compile(r"%([0-9A-F]{2})")
 
 
 def _escape_partition_value(value) -> str:
     if value is None:
-        # Spark writes null partition values to this sentinel directory.
-        return "__HIVE_DEFAULT_PARTITION__"
+        return _NULL_PARTITION
     out = []
     for ch in str(value):
         if ch in _ESCAPE_CHARS or ord(ch) < 0x20 or ch == "\x7f":
@@ -69,6 +72,33 @@ def _escape_partition_value(value) -> str:
         else:
             out.append(ch)
     return "".join(out)
+
+
+def _unescape_partition_value(name: str) -> str | None:
+    """Inverse of ``_escape_partition_value``: '%' itself is always escaped
+    as %25, so the decode is unambiguous; the null sentinel maps back to
+    None."""
+    if name == _NULL_PARTITION:
+        return None
+    return _PCT.sub(lambda m: chr(int(m.group(1), 16)), name)
+
+
+def _partition_predicate(partition_cols: tuple[str, ...], partitions) -> Column:
+    """Rows of any of ``partitions`` (tuples of values, one per column).
+    Values are compared as STRINGS, null-safely: a table read back surfaces
+    partition values as strings (partitionColumnTypeInference is pinned
+    off) while a batch carries native types, and Spark's cast agrees with
+    its own directory rendering (boolean -> 'true'); a null partition is
+    matched by a null value, never by ``==``."""
+    pred = F.lit(False)
+    for values in partitions:
+        clause = F.lit(True)
+        for col, val in zip(partition_cols, values):
+            clause = clause & F.col(col).cast("string").eqNullSafe(
+                F.lit(val).cast("string")
+            )
+        pred = pred | clause
+    return pred
 
 
 def _hidden(name: str) -> bool:
@@ -137,14 +167,11 @@ def upsert_chunks(
     existing = spark.read.parquet(path)
 
     # Targets: the (key, *partition) pairs this batch deletes, collected
-    # once.  Partition values are canonicalized to STRINGS Spark-side: the
-    # read-back side surfaces them as strings (partitionColumnTypeInference
-    # is pinned off) while a batch carries native types, and Spark's cast
-    # agrees with its own directory rendering (boolean -> 'true', null
-    # stays None and is matched null-safely below).  Comparing raw values
-    # would make bigint 3 and string '3' different partitions and send
-    # every partition down the emptied-rewrite path (kb_vector_upsert's
-    # bigint bucket key caught that).
+    # once.  Partition values are canonicalized to STRINGS Spark-side, as
+    # _partition_predicate compares them (null stays None).  Comparing raw
+    # values would make bigint 3 and string '3' different partitions and
+    # send every partition down the emptied-rewrite path
+    # (kb_vector_upsert's bigint bucket key caught that).
     def _keyed(df: DataFrame) -> DataFrame:
         return df.select(
             key_col, *[F.col(c).cast("string").alias(c) for c in partition_cols]
@@ -165,16 +192,9 @@ def upsert_chunks(
     if not affected:
         return
 
-    part_pred = F.lit(False)
-    for values in affected:
-        clause = F.lit(True)
-        for col, val in zip(partition_cols, values):
-            clause = clause & F.col(col).cast("string").eqNullSafe(
-                F.lit(val).cast("string")
-            )
-        part_pred = part_pred | clause
     # null keys never match a delete (as in an anti join)
     keys = [t[0] for t in targets if t[0] is not None]
+    part_pred = _partition_predicate(partition_cols, affected)
     survivors = existing.filter(part_pred).filter(
         F.col(key_col).isNull() | ~F.col(key_col).isin(keys)
     )

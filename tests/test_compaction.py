@@ -108,6 +108,38 @@ def test_compaction_leaves_cold_partitions_untouched(spark, tmp_path):
     assert fragmented  # sanity: the test exercised a real compaction
 
 
+def test_compaction_rewrites_fragmented_null_partition(spark, tmp_path):
+    """A null partition value lives in Spark's __HIVE_DEFAULT_PARTITION__
+    directory; compaction must select it null-safely, or it reports the
+    partition compacted while leaving every file in place."""
+    path = str(tmp_path / "chunks")
+    for i in range(3):
+        (
+            _chunks(
+                spark,
+                [
+                    (f"N_{i}.0", None, "20250101", 1, f"n{i}"),
+                    (f"G_{i}.0", "gen", "20250101", 1, f"g{i}"),
+                ],
+            )
+            .write.mode("append")
+            .partitionBy("channel_name", "msg_date")
+            .parquet(path)
+        )
+    before = _snapshot(spark, path)
+    counts = partition_file_counts(path)
+    assert len(counts) == 2 and all(n > 1 for n in counts.values()), (
+        "fixture failed to fragment"
+    )
+
+    assert compact_keyed_table(spark, path) == 2
+    assert partition_file_counts(path) == {
+        (None, "20250101"): 1,
+        ("gen", "20250101"): 1,
+    }
+    assert _snapshot(spark, path) == before
+
+
 def test_merge_upsert_semantics(spark):
     target = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],

@@ -77,3 +77,20 @@ def test_env_surface_is_allowlisted():
         for name in literal.findall(src.read_text(encoding="utf-8"))
     }
     assert found == _ENV_ALLOWLIST
+
+
+def test_cosine_dot_fold_lives_only_in_similarity():
+    """Cosine scoring has one implementation: no package module but
+    operators/similarity.py spells out the zip_with dot fold, so every
+    scorer shares ``cosine_col``'s folds (and its zero-norm guard)."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "knowledgebot_spark"
+    dot_fold = re.compile(r"zip_with\(.{0,200}?\(x, y\) -> CAST\(x AS DOUBLE\) \*", re.S)
+    found = {
+        src.relative_to(pkg).as_posix()
+        for src in pkg.rglob("*.py")
+        if dot_fold.search(src.read_text(encoding="utf-8"))
+    }
+    assert found == {"operators/similarity.py"}

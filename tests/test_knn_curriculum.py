@@ -102,9 +102,20 @@ def test_cosine_zero_vector_scores_null_not_abort(spark):
         [(1, [0.0] * 4, [1.0, 2.0, 3.0, 4.0]), (2, [2.0, 0.0, 0.0, 0.0], [1.0, 0.0, 0.0, 0.0])],
         "id long, a array<double>, b array<double>",
     )
-    rows = {r.id: r.cos for r in df.select("id", sim.cosine_col("a", "b").alias("cos")).collect()}
-    assert rows[1] is None
-    assert abs(rows[2] - 1.0) < 1e-12
+
+    def cos(frame, *args):
+        return {r.id: r.cos for r in frame.select("id", sim.cosine_col(*args).alias("cos")).collect()}
+
+    normed = df.withColumn("na", F.expr(sim.norm_expr("a"))).withColumn(
+        "nb", F.expr(sim.norm_expr("b"))
+    )
+    one = sim.array_literal([1.0, 0.0, 0.0, 0.0])
+    # default norms, precomputed norm columns (pairwise joins) and a
+    # spliced array_literal query operand (literal-query search)
+    for rows in (cos(df, "a", "b"), cos(normed, "a", "b", "na", "nb"), cos(df, "a", one)):
+        assert rows[1] is None
+        assert abs(rows[2] - 1.0) < 1e-12
+    assert set(cos(df, "b", sim.array_literal([0.0] * 4)).values()) == {None}
 
 
 def test_embedding_drift_identical_cohorts_score_one(spark, tmp_path):

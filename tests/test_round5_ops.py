@@ -50,9 +50,7 @@ def test_semdedup_drops_planted_duplicate(spark, sf_dir, catalog):
     ).withColumn(
         "cos",
         F.round(
-            sim.cosine_prenorm_col(
-                "ea", "eb", sim.norm_expr("ea"), sim.norm_expr("eb")
-            ),
+            sim.cosine_col("ea", "eb", sim.norm_expr("ea"), sim.norm_expr("eb")),
             6,
         ),
     )
