@@ -9,6 +9,17 @@ partition coalescing), broadcast threshold left at default so small dims
 (region/nation/users/channels) broadcast automatically, and shuffle
 partitions sized from the environment so a real cluster can raise it to
 O(cores * 2..4) while local tests stay small.
+
+Python workers start from ``pydaemon`` (``spark.python.daemon.module``),
+which stops each task's ``importlib.invalidate_caches()`` from re-reading
+``pyspark.zip``: about 200 ms of CPU per Python task, and a one-row query
+frame runs four such tasks.  The daemon needs executors that can import
+``knowledgebot_spark``, as the engine's module-level UDFs already do; the
+package's parent directory is prepended to ``spark.executorEnv.PYTHONPATH``
+so a local session finds it from any working directory.  On a cluster the
+package must be importable where the executors run (installed, or on their
+``PYTHONPATH``): the daemon imports it when it starts, before any task adds
+its ``--py-files`` to ``sys.path``.
 """
 
 from __future__ import annotations
@@ -16,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# directory that holds the knowledgebot_spark package, for the workers
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_session(
@@ -77,7 +91,12 @@ def get_session(
         .config("spark.sql.files.minPartitionNum", str(min_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "knowledgebot_spark.pydaemon")
     )
-    for key, value in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

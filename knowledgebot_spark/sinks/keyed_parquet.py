@@ -217,11 +217,12 @@ def upsert_chunks(
         .parquet(path)
     )
     # A partition whose every row was tombstoned has no rows in `out`, so
-    # the overwrite left its files as they were; rewrite it empty.
+    # the overwrite left its files as they were; rewrite it empty.  The
+    # LIMIT 0 frame folds to an empty local relation, so the rewrite runs
+    # no Python worker.
     for d, files in before.items():
         if files and _listing(d) == files:
-            empty = spark.createDataFrame([], out.drop(*partition_cols).schema)
-            empty.write.mode("overwrite").parquet(d)
+            out.drop(*partition_cols).limit(0).write.mode("overwrite").parquet(d)
 
 
 def serialize_chunk_files(df: DataFrame) -> DataFrame:

@@ -395,7 +395,8 @@ def run_to_parquet(stream: DataFrame, out_dir: str, ckpt_dir: str) -> DataFrame:
             if os.path.isdir(os.path.join(out_dir, d))
         )
     ):
-        return spark.createDataFrame([], stream.schema)
+        # over a zero-partition RDD, so the frame runs no Python worker task
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), stream.schema)
     return spark.read.parquet(out_dir).drop("batch_id")
 
 

@@ -339,6 +339,32 @@ def test_run_to_parquet_replay_idempotent(spark, tmp_path):
     assert {r.v for r in got2.collect()} == set(range(10))
 
 
+def test_run_to_parquet_empty_stream_runs_no_task(spark, tmp_path):
+    """A stream that lands no batch returns an empty frame with the
+    stream's schema, and reading it runs no (Python worker) task."""
+    from knowledgebot_spark.streaming.pipeline import run_to_parquet
+
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema("v long").parquet(str(src))
+    got = run_to_parquet(stream, str(tmp_path / "out"), str(tmp_path / "ck"))
+    assert got.schema == stream.schema
+    sc = spark.sparkContext
+    group = "run-to-parquet-empty"
+    sc.setJobGroup(group, group)
+    try:
+        assert got.collect() == []
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    tasks = sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    assert tasks == 0
+
+
 # --- epoch-mixture sample materializer (round 10) -------------------------------
 
 

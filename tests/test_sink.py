@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from knowledgebot_spark.sinks.checkpoint import IncrementalRun, load_state, save_state
@@ -391,7 +392,7 @@ def test_partition_keyed_upsert_reads_no_unaffected_partition(spark, tmp_path):
     )
 
 
-def test_partition_keyed_tombstone_can_empty_a_partition(spark, tmp_path):
+def test_partition_keyed_tombstone_can_empty_a_partition(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "chunks")
     upsert_chunks(
         spark,
@@ -408,5 +409,30 @@ def test_partition_keyed_tombstone_can_empty_a_partition(spark, tmp_path):
         [("C1_1.0", "general", "20250101")],
         "msg_key string, channel_name string, msg_date string",
     )
+    # every parquet write below the table root (the emptied partition's
+    # rewrite) runs in a job group of its own
+    sc = spark.sparkContext
+    group = "keyed-empty-partition-rewrite"
+    write = DataFrameWriter.parquet
+
+    def grouped_write(self, target, *args, **kwargs):
+        if target == path:
+            return write(self, target, *args, **kwargs)
+        sc.setJobGroup(group, group)
+        try:
+            return write(self, target, *args, **kwargs)
+        finally:
+            sc.setJobGroup(None, None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", grouped_write)
     upsert_chunks(spark, path, _chunks(spark, []), reprocessed_keys=keys)
     assert _snapshot(spark, path) == [("C2_2.0", "random", "20250102", 1, "keep")]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs, "the emptied partition was not rewritten"
+    tasks = sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    assert tasks <= 1, f"rewriting an empty partition ran {tasks} tasks"
