@@ -12,16 +12,39 @@ Mirrors the reference's ``main`` -> ``process_channel`` lifecycle
     intended semantics of the reference's broken ``_process_message``,
     SURVEY.md §2.2) — parents re-enter the spine and their keys tombstone;
   * chunks land in a (channel_name, msg_date)-partitioned parquet table.
+
+Driver memory: a run holds its scope rows on the driver, message text
+included, once per run.  That is bounded by the arrival window (plus the
+``#EDIT`` parents it reopens); a first run with no checkpoint collects
+every in-scope message.
 """
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
 from knowledgebot_spark.operators import edits as ed
 from knowledgebot_spark.operators import extraction as ex
 from knowledgebot_spark.sinks.checkpoint import IncrementalRun
 from knowledgebot_spark.sinks.keyed_parquet import upsert_chunks
+
+
+def batch_scope(msgs: DataFrame, ckpt_micros: int, lookback_days: int = 7) -> DataFrame:
+    """The messages one run reprocesses, keyed: the fresh ones (F1/F2) and
+    the parents their ``#EDIT`` replies reopen, each once."""
+    keyed = ex.with_msg_key(msgs)
+    fresh = ex.filter_fresh(keyed, ckpt_micros, lookback_days)
+    # #EDIT replies pull their parents back into scope even when the parent
+    # itself is older than the checkpoint (J5 on the full keyed scan).
+    edit_parents = ex.with_msg_key(
+        ed.join_parents(ed.edit_replies(fresh), keyed).drop(
+            "edit_ts_raw", "parent_ts_micros"
+        )
+    )
+    return fresh.unionByName(edit_parents.select(fresh.columns)).dropDuplicates(
+        ["msg_key"]
+    )
 
 
 def run_extraction(
@@ -38,33 +61,23 @@ def run_extraction(
     """One incremental run; returns A3-style counters."""
     run = IncrementalRun(state_path, now_micros)
     ckpt = run.checkpoint_micros
+    scope = batch_scope(msgs, ckpt, lookback_days)
 
-    keyed = ex.with_msg_key(msgs)
-    fresh = ex.filter_fresh(keyed, ckpt, lookback_days)
-
-    # #EDIT replies pull their parents back into scope even when the parent
-    # itself is older than the checkpoint (J5 on the full keyed scan).
-    edit_parents = ex.with_msg_key(
-        ed.join_parents(ed.edit_replies(fresh), keyed).drop(
-            "edit_ts_raw", "parent_ts_micros"
-        )
-    )
-    scope = fresh.unionByName(edit_parents.select(fresh.columns)).dropDuplicates(
-        ["msg_key"]
-    )
-
+    # The scope executes once: its rows, each with the partition it lands
+    # in, are collected through Arrow (which keeps nullable bigints exact)
+    # and come back as a driver-side LocalRelation that the chunk plan and
+    # the sink's key frame both read without re-running the scan, the
+    # #EDIT join or the dedup shuffle.
+    collected = ex.with_target_partition(scope, channels).toArrow()
+    local = spark.createDataFrame(collected)
     chunks = ex.build_knowledge_chunks(
-        scope, users, channels, members, ckpt_micros=None
+        local.select(*scope.columns), users, channels, members, ckpt_micros=None
     )
     # K2: every in-scope message key is reprocessed — deletes run even for
     # messages that no longer (or never) contain a knowledge block.  Each
     # key carries the partition its chunks land in, so the sink needs no
     # table scan to find it.
-    keyed_scope = ex.tombstone_targets(scope, channels)
-    # collected once; through pandas (Arrow) the key frame is a driver-side
-    # LocalRelation, which the sink reads back without running a job
-    targets = keyed_scope.toPandas()
-    reprocessed = spark.createDataFrame(targets, keyed_scope.schema)
+    reprocessed = local.select("msg_key", "channel_name", "msg_date")
 
     upsert_chunks(spark, output_path, chunks, reprocessed_keys=reprocessed)
     run.commit()
@@ -73,5 +86,5 @@ def run_extraction(
     return {
         "checkpoint_before": ckpt,
         "checkpoint_after": run.start_micros,
-        "n_reprocessed_keys": targets["msg_key"].nunique(),
+        "n_reprocessed_keys": pc.count_distinct(collected["msg_key"]).as_py(),
     }

@@ -149,13 +149,22 @@ def msg_date() -> Column:
     return F.date_format(F.timestamp_micros(F.col("ts_micros")), "yyyyMMdd")
 
 
+def with_target_partition(msgs: DataFrame, channels: DataFrame) -> DataFrame:
+    """``msgs`` plus ``channel_name`` and ``msg_date``: the chunk table
+    partition each message's chunks and tombstone land in.  The channel
+    inner join (F6) drops messages of unknown channels, so they yield
+    neither chunks nor tombstones."""
+    return enrich_channel(msgs, channels).select(
+        *msgs.columns, "channel_name", msg_date().alias("msg_date")
+    )
+
+
 def tombstone_targets(msgs: DataFrame, channels: DataFrame) -> DataFrame:
     """K2 targets: ``(msg_key, channel_name, msg_date)`` of every message
     in scope, knowledge block or not — the keys whose stored chunks an
-    upsert replaces, each with the partition its chunks land in.  The
-    channel inner join (F6) applies to the tombstone set too."""
-    return enrich_channel(msgs, channels).select(
-        "msg_key", "channel_name", msg_date().alias("msg_date")
+    upsert replaces, each with the partition its chunks land in."""
+    return with_target_partition(msgs, channels).select(
+        "msg_key", "channel_name", "msg_date"
     )
 
 

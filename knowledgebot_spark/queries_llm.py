@@ -3854,17 +3854,22 @@ def llm_dedup_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
     # 4 driver threads = 4 concurrent jobs; FIFO scheduling back-fills
     # each detector's straggler tail with the next one's tasks (§2.6)
     with ThreadPoolExecutor(max_workers=len(detectors)) as pool:
-        parts = [
-            df.withColumn("d", F.lit(name))
-            for name, df in pool.map(_materialize, detectors)
-        ]
+        ckpts = list(pool.map(_materialize, detectors))
+    parts = [df.withColumn("d", F.lit(name)) for name, df in ckpts]
     tagged = parts[0]
     for p in parts[1:]:
         tagged = tagged.unionByName(p)
     combos = tagged.groupBy("id_a", "id_b").agg(
         F.array_join(F.array_sort(F.collect_set("d")), "+").alias("detectors")
     )
-    return combos.groupBy("detectors").agg(F.count("*").alias("n_pairs"))
+    # The report (one row per detector combination, at most 15) is
+    # collected so the four checkpoints can be released.  Unpersisting a
+    # DataFrame does not free its local checkpoint: the checkpointed RDD
+    # under its LogicalRDD has to be unpersisted.
+    report = combos.groupBy("detectors").agg(F.count("*").alias("n_pairs")).toArrow()
+    for _, df in ckpts:
+        df._jdf.logicalPlan().rdd().unpersist(False)
+    return spark.createDataFrame(report)
 
 
 # --- per-source token-mass Gini (wave 9) --------------------------------------

@@ -16,14 +16,16 @@ the key delete are both built from that list.  The pairs come from one
 of two places:
 
   * a key frame that carries the partition columns: its rows are the
-    targets, and no existing data is read to find them.  This assumes a
-    key's rows live in the partition its key frame names, which holds
-    when the partition is a function of the key's message, as
-    ``(channel_name, msg_date)`` is for ``run_extraction`` and the
-    streaming spine.  Stored rows of a key in any other partition (say,
-    after a channel rename) are not deleted; pass keys only for such a
-    batch.  Every row of ``new_rows`` must also lie in a partition the
-    frame names, or the overwrite replaces a partition nobody read;
+    targets, and no existing data is read to find them; the merge reads
+    only the affected partition directories, so the table root is never
+    listed.  This assumes a key's rows live in the partition its key
+    frame names, which holds when the partition is a function of the
+    key's message, as ``(channel_name, msg_date)`` is for
+    ``run_extraction`` and the streaming spine.  Stored rows of a key in
+    any other partition (say, after a channel rename) are not deleted;
+    pass keys only for such a batch.  Every row of ``new_rows`` must also
+    lie in a partition the frame names, or the overwrite replaces a
+    partition nobody read;
   * a key-only frame, or none (the keys of ``new_rows``): the keys are
     looked up in the existing table with a broadcast ``left_semi``, and
     the partitions of ``new_rows`` are added.
@@ -40,7 +42,9 @@ partitions, and each is rewritten empty.
 Scale posture (100 TB): the table is partitioned by
 ``(channel_name, msg_date)`` and an incremental batch reads and rewrites
 only the partitions its keys live in — never the whole table.  The
-driver holds one batch's target pairs.
+driver holds one batch's target pairs; ``run_extraction`` hands it a key
+frame already on the driver (the batch's collected scope rows, message
+text included, bounded by the arrival window).
 """
 
 from __future__ import annotations
@@ -164,8 +168,6 @@ def upsert_chunks(
         )
         return
 
-    existing = spark.read.parquet(path)
-
     # Targets: the (key, *partition) pairs this batch deletes, collected
     # once.  Partition values are canonicalized to STRINGS Spark-side, as
     # _partition_predicate compares them (null stays None).  Comparing raw
@@ -177,11 +179,13 @@ def upsert_chunks(
             key_col, *[F.col(c).cast("string").alias(c) for c in partition_cols]
         )
 
+    existing = None
     if reprocessed_keys is not None and set(partition_cols) <= set(
         reprocessed_keys.columns
     ):
         targets_df = _keyed(reprocessed_keys)
     else:
+        existing = spark.read.parquet(path)
         key_frame = new_rows if reprocessed_keys is None else reprocessed_keys
         located = existing.join(
             F.broadcast(key_frame.select(key_col)), key_col, "left_semi"
@@ -192,23 +196,32 @@ def upsert_chunks(
     if not affected:
         return
 
-    # null keys never match a delete (as in an anti join)
-    keys = [t[0] for t in targets if t[0] is not None]
-    part_pred = _partition_predicate(partition_cols, affected)
-    survivors = existing.filter(part_pred).filter(
-        F.col(key_col).isNull() | ~F.col(key_col).isin(keys)
-    )
-    out = survivors.select(
-        [F.col(c).cast(new_rows.schema[c].dataType) for c in new_rows.columns]
-    ).unionByName(new_rows)
+    dirs = [_partition_dir(path, partition_cols, v) for v in affected]
+    before = {d: _listing(d) for d in dirs}
+    if existing is None:
+        # only the affected partitions that hold files are read; the table
+        # root is never listed (past 32 directories that listing is a job)
+        present = [d for d, files in before.items() if files]
+        if present:
+            existing = spark.read.option("basePath", path).parquet(*present)
+
+    out = new_rows
+    if existing is not None:
+        # null keys never match a delete (as in an anti join)
+        keys = [t[0] for t in targets if t[0] is not None]
+        part_pred = _partition_predicate(partition_cols, affected)
+        survivors = existing.filter(part_pred).filter(
+            F.col(key_col).isNull() | ~F.col(key_col).isin(keys)
+        )
+        out = survivors.select(
+            [F.col(c).cast(new_rows.schema[c].dataType) for c in new_rows.columns]
+        ).unionByName(new_rows)
 
     # Dynamic partition overwrite: the job stages its output and, at
     # commit, replaces only the partitions present in `out` (== the
     # affected set); one hash shuffle on the partition columns writes each
     # of them as one file.  `out` reads the files it replaces, so this
     # write is its only execution.
-    dirs = [_partition_dir(path, partition_cols, v) for v in affected]
-    before = {d: _listing(d) for d in dirs}
     (
         out.repartition(*partition_cols)
         .write.mode("overwrite")

@@ -13,8 +13,10 @@ two entry points run back to back, plus the declared search API:
 Usage:
     python scripts/run_pipeline.py [sf_dir] [workdir] [query terms...]
 
-Everything runs as DataFrame plans; the only driver-side materialization
-is the final top-k result print (bounded by k).
+Everything runs as DataFrame plans.  Two results come to the driver: E1
+collects its batch's in-scope messages once, text included (bounded by
+the arrival window; this run has no checkpoint, so that is every
+in-scope message), and E3 prints the top-k rows (bounded by k).
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ QUERY = " ".join(sys.argv[3:]) or "spark table scan"
 TOP_K = 5
 
 
-def main() -> None:
+def main(sf_dir: str = SF_DIR, workdir: str = WORKDIR, query_text: str = QUERY) -> None:
     from knowledgebot_spark import incremental, model
     from knowledgebot_spark.operators import chunker as ck
     from knowledgebot_spark.operators import embedding as em
@@ -44,22 +46,22 @@ def main() -> None:
 
     spark = get_session("knowledgebot-pipeline")
     spark.sparkContext.setLogLevel("ERROR")
-    shutil.rmtree(WORKDIR, ignore_errors=True)
-    chunks_path = f"{WORKDIR}/knowledge_chunks"
-    export_path = f"{WORKDIR}/export"
-    d5_path = f"{WORKDIR}/vector_chunks"
+    shutil.rmtree(workdir, ignore_errors=True)
+    chunks_path = f"{workdir}/knowledge_chunks"
+    export_path = f"{workdir}/export"
+    d5_path = f"{workdir}/vector_chunks"
     os.makedirs(export_path)
 
     # ---- E1: incremental extraction ------------------------------------
     t0 = time.time()
     counters = incremental.run_extraction(
         spark,
-        model.messages(spark, SF_DIR),
-        model.users_dim(spark, SF_DIR),
-        model.channels_dim(spark, SF_DIR),
-        model.members(spark, SF_DIR),
+        model.messages(spark, sf_dir),
+        model.users_dim(spark, sf_dir),
+        model.channels_dim(spark, sf_dir),
+        model.members(spark, sf_dir),
         output_path=chunks_path,
-        state_path=f"{WORKDIR}/state.json",
+        state_path=f"{workdir}/state.json",
         now_micros=model.CKPT_MICROS + 365 * 86400 * 1_000_000,
     )
     print(
@@ -106,12 +108,12 @@ def main() -> None:
     t0 = time.time()
     table = spark.read.parquet(d5_path)
     query = spark.createDataFrame(
-        [(em.embed_text(QUERY),)], "qvec array<float>"
+        [(em.embed_text(query_text),)], "qvec array<float>"
     )
     hits = sim.topk_cosine(
         table, query, k=TOP_K, id_col="chunk_id", vec_col="embedding"
     ).join(table.select("chunk_id", "channel_name", "text"), "chunk_id")
-    print(f"[E3] top-{TOP_K} for {QUERY!r} ({time.time() - t0:.1f}s):")
+    print(f"[E3] top-{TOP_K} for {query_text!r} ({time.time() - t0:.1f}s):")
     for r in hits.orderBy(F.desc("score")).collect():
         print(f"  {r.score:.4f}  [{r.channel_name}] {r.text[:70]}")
 

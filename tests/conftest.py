@@ -26,3 +26,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def rows_read(spark):
+    """``rows_read(group, action)``: input records of every stage the jobs
+    of ``action`` ran, read from the status store through a job group of
+    their own (a skipped stage never ran and read nothing)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def measure(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        total = 0
+        for job in sc.statusTracker().getJobIdsForGroup(group):
+            for stage in sc.statusTracker().getJobInfo(job).stageIds:
+                try:
+                    total += store.lastStageAttempt(stage).inputRecords()
+                except Exception:  # skipped stage
+                    pass
+        return total
+
+    return measure

@@ -4,10 +4,13 @@ them; checkpoint advances with pre-scan stamp."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from knowledgebot_spark.incremental import run_extraction
+from knowledgebot_spark.incremental import batch_scope, run_extraction
+from knowledgebot_spark.sinks.checkpoint import IncrementalRun
 
 MSG_SCHEMA = (
     "msg_id bigint, channel_id string, ts_micros bigint, ts_raw string, "
@@ -128,3 +131,82 @@ def test_rerun_same_window_is_idempotent(spark, dims, tmp_path):
     _run(spark, dims, rows, out, state, now_days=10)
     snap2 = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert snap1 == snap2
+
+
+def test_run_executes_its_scope_once(spark, dims, tmp_path, rows_read):
+    """The scope (fresh scan, #EDIT parent join, dedup) runs once per run:
+    the chunks and the tombstone targets both come from its collected
+    rows, so the write does not scan the messages again.  The table does
+    not exist yet, so every record the run reads is a message."""
+    src = str(tmp_path / "messages")
+    rows = [_msg(i, "C1", f"#KNOWLEDGE k{i} #END") for i in range(1, 9)]
+    rows.append(_msg(9, "C1", "#EDIT fix", thread=3))
+    spark.createDataFrame(rows, MSG_SCHEMA).coalesce(1).write.parquet(src)
+    msgs = spark.read.parquet(src)
+    users, channels, members = dims
+
+    once = rows_read(
+        "scope-once-reference",
+        lambda: batch_scope(msgs, 0).write.format("noop").mode("overwrite").save(),
+    )
+    run = rows_read(
+        "scope-once-run",
+        lambda: run_extraction(
+            spark, msgs, users, channels, members,
+            output_path=str(tmp_path / "chunks"), state_path=str(tmp_path / "state"),
+            now_micros=10 * DAY,
+        ),
+    )
+    assert once > 0
+    assert run == once, f"the run read {run} message records; one scope execution reads {once}"
+    assert spark.read.parquet(str(tmp_path / "chunks")).count() == 8
+
+
+def _files_and_mtimes(path):
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_mtime_ns
+        for root, _dirs, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_empty_arrival_window_leaves_table_and_advances_checkpoint(
+    spark, dims, tmp_path
+):
+    """No fresh message and no #EDIT: the collected scope has zero rows,
+    nothing is written, and the checkpoint still moves to the new stamp."""
+    out, state = str(tmp_path / "chunks"), str(tmp_path / "state")
+    rows = [_msg(8, "C1", "#KNOWLEDGE a #END"), _msg(9, "C1", "plain")]
+    _run(spark, dims, rows, out, state, now_days=10)
+    files = _files_and_mtimes(out)
+
+    stats = _run(spark, dims, rows, out, state, now_days=12)
+    assert stats["n_reprocessed_keys"] == 0
+    assert (stats["checkpoint_before"], stats["checkpoint_after"]) == (10 * DAY, 12 * DAY)
+    assert IncrementalRun(state, 0).checkpoint_micros == 12 * DAY
+    assert _files_and_mtimes(out) == files
+
+
+def test_unknown_channel_yields_no_chunk_and_no_tombstone(spark, dims, tmp_path):
+    """F6: a message of a channel missing from the channel dim makes no
+    chunk and no tombstone target (no null-channel partition appears),
+    while a known channel's stored chunk in the same batch is replaced."""
+    out, state = str(tmp_path / "chunks"), str(tmp_path / "state")
+    _run(spark, dims, [_msg(8, "C1", "#KNOWLEDGE old #END")], out, state, now_days=10)
+
+    rows = [
+        _msg(8, "C1", "#KNOWLEDGE new #END"),
+        _msg(11, "C1", "#EDIT fix", thread=8),
+        _msg(12, "C9", "#KNOWLEDGE orphan #END"),
+    ]
+    stats = _run(spark, dims, rows, out, state, now_days=12)
+    # msg 8 (reopened by its #EDIT reply) and the reply itself; not msg 12
+    assert stats["n_reprocessed_keys"] == 2
+    got = {
+        (r.msg_key, r.channel_name, r.content)
+        for r in spark.read.parquet(out).select("msg_key", "channel_name", "content").collect()
+    }
+    assert got == {("C1_8.000000", "general", "new")}
+    assert sorted(
+        d for d in os.listdir(out) if not d.startswith(("_", "."))
+    ) == ["channel_name=general"]

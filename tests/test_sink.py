@@ -344,27 +344,7 @@ def test_upsert_writes_one_file_per_affected_partition(spark, tmp_path):
     assert _snapshot(spark, path) == sorted(want.values())
 
 
-def _rows_read(spark, group, action):
-    """Input records of every stage the jobs of ``action`` ran, read from
-    the status store through a job group of their own."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setJobGroup(None, None)
-    total = 0
-    for job in sc.statusTracker().getJobIdsForGroup(group):
-        for stage in sc.statusTracker().getJobInfo(job).stageIds:
-            try:
-                total += store.lastStageAttempt(stage).inputRecords()
-            except Exception:  # skipped stage: never ran, read nothing
-                pass
-    return total
-
-
-def test_partition_keyed_upsert_reads_no_unaffected_partition(spark, tmp_path):
+def test_partition_keyed_upsert_reads_no_unaffected_partition(spark, tmp_path, rows_read):
     """With a key frame that names each key's partition, the upsert reads
     only the affected partitions: the 1000 rows of a cold partition are
     never scanned to look keys up."""
@@ -381,8 +361,7 @@ def test_partition_keyed_upsert_reads_no_unaffected_partition(spark, tmp_path):
         [("C1_1.0", "general", "20250101")],
         "msg_key string, channel_name string, msg_date string",
     )
-    read = _rows_read(
-        spark,
+    read = rows_read(
         "keyed-upsert-read-audit",
         lambda: upsert_chunks(spark, path, batch, reprocessed_keys=keys),
     )
@@ -436,3 +415,40 @@ def test_partition_keyed_tombstone_can_empty_a_partition(spark, tmp_path, monkey
         for stage in tracker.getJobInfo(job).stageIds
     )
     assert tasks <= 1, f"rewriting an empty partition ran {tasks} tasks"
+
+
+def test_partition_keyed_upsert_lists_only_affected_partitions(spark, tmp_path, rows_read):
+    """On a table of 40 partition directories, a partition-keyed upsert
+    reads the affected directory alone: no file-listing job (Spark lists
+    more than 32 directories in a parallel job) and no row of an
+    unaffected partition."""
+    path = str(tmp_path / "chunks")
+    rows = [
+        (f"C{c}_{i}.0", f"chan{c:02d}", "20250101", 1, "x")
+        for c in range(40)
+        for i in range(3)
+    ]
+    upsert_chunks(spark, path, _chunks(spark, rows))
+    assert len(os.listdir(path)) >= 40
+
+    batch = _chunks(spark, [("C0_1.0", "chan00", "20250101", 1, "new")])
+    keys = spark.createDataFrame(
+        [("C0_1.0", "chan00", "20250101")],
+        "msg_key string, channel_name string, msg_date string",
+    )
+    group = "keyed-upsert-listing-audit"
+    read = rows_read(
+        group, lambda: upsert_chunks(spark, path, batch, reprocessed_keys=keys)
+    )
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    listings = [
+        job
+        for job in sc.statusTracker().getJobIdsForGroup(group)
+        if "Listing leaf files" in str(store.job(job).description())
+    ]
+    assert not listings, f"the upsert ran {len(listings)} file-listing job(s)"
+    assert read <= 3, f"read {read} rows; the affected partition holds 3"
+    want = {r[0]: r for r in rows}
+    want["C0_1.0"] = ("C0_1.0", "chan00", "20250101", 1, "new")
+    assert _snapshot(spark, path) == sorted(want.values())

@@ -403,6 +403,18 @@ def test_dedup_overlap_report_conserves_pairs(spark, sf_dir):
         assert r.detectors == "+".join(sorted(r.detectors.split("+")))
 
 
+def test_dedup_overlap_report_releases_its_checkpoints(spark, sf_dir):
+    """The four per-detector local checkpoints are freed once the report
+    is built: repeated calls in one session hold no more persisted RDDs."""
+    from knowledgebot_spark.queries_llm import llm_dedup_overlap_report
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for _ in range(2):
+        llm_dedup_overlap_report(spark, sf_dir).collect()
+    assert persisted().size() <= before
+
+
 def test_rolling_wau_recomputes_brute_force(spark, sf_dir):
     """WAU law: for sampled days, the trailing-7-day distinct-user count
     must equal a brute-force filter over the raw log."""
