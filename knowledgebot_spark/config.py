@@ -6,13 +6,15 @@ truthy parsing, ``Config/Schema.py:119-122`` comma-list parsing,
 ``Config/Resolver.py:20-38`` source priority) without the Docker-secrets
 machinery (out of scope per SURVEY.md §7 non-goals).
 
-Fixes carried forward from SURVEY.md §2.2:
-  * chunk_size/chunk_overlap are actually wired into the chunker (the
-    reference declares VECTOR_DB_CHUNK_LENGTH=100/OVERLAP=20 but chunk_text
-    runs on its own 20/5 defaults — Config/Schema.py:27-28 vs
-    VectorDatabase/TextProcessor.py:36-37).
-  * ``overlap >= chunk_size`` is rejected at validation time (the reference
-    chunker infinite-loops on it, TextProcessor.py:34-48).
+Fix carried forward from SURVEY.md §2.2: ``overlap >= chunk_size`` is
+rejected at validation time (the reference chunker infinite-loops on it,
+TextProcessor.py:34-48).
+
+chunk_size/chunk_overlap keep the reference's declared 100/20
+(Config/Schema.py:27-28), but no E2 path reads them: like the reference,
+whose chunk_text runs on its own 20/5 defaults
+(VectorDatabase/TextProcessor.py:36-37), the CLI passes 20/5 to the
+chunker.
 """
 
 from __future__ import annotations
@@ -56,7 +58,8 @@ class EngineConfig:
     keywords_top_n: int = 5                   # call-site default KnowledgeBot.py:522
     summary_max_words: int = 25               # KnowledgeBot.py:523
 
-    # chunking / vector ingest (Config/Schema.py:27-28, properly wired)
+    # chunking / vector ingest (Config/Schema.py:27-28; validated only, E2
+    # runs the chunker at 20/5)
     chunk_size: int = 100
     chunk_overlap: int = 20
     embedding_dim: int = 16

@@ -11,12 +11,14 @@ Mirrors the reference's ``main`` -> ``process_channel`` lifecycle
   * ``#EDIT`` thread replies re-extract their *parent* message (the
     intended semantics of the reference's broken ``_process_message``,
     SURVEY.md §2.2) — parents re-enter the spine and their keys tombstone;
-  * chunks land in a (channel_name, msg_date)-partitioned parquet table.
+  * chunks land in a (channel_name, msg_date)-partitioned parquet table
+    through ``upsert_scope``, the write path the streaming spine
+    (``stream_extraction_spine``) shares.
 
-Driver memory: a run holds its scope rows on the driver, message text
-included, once per run.  That is bounded by the arrival window (plus the
-``#EDIT`` parents it reopens); a first run with no checkpoint collects
-every in-scope message.
+Driver memory: a run (or a micro-batch) holds its scope rows on the
+driver, message text included, once.  That is bounded by the arrival
+window (plus the ``#EDIT`` parents it reopens); a first run with no
+checkpoint collects every in-scope message.
 """
 
 from __future__ import annotations
@@ -47,6 +49,36 @@ def batch_scope(msgs: DataFrame, ckpt_micros: int, lookback_days: int = 7) -> Da
     )
 
 
+def upsert_scope(
+    spark: SparkSession,
+    scope: DataFrame,
+    users: DataFrame,
+    channels: DataFrame,
+    members: DataFrame,
+    output_path: str,
+) -> int:
+    """Replace the stored chunks of every message in ``scope`` (keyed by
+    ``msg_key``) with the chunks its current text yields; returns the
+    number of keys reprocessed.  The one write path of E1: a batch run's
+    scope and a streaming micro-batch both land here."""
+    # The scope executes once: its rows, each with the partition it lands
+    # in, are collected through Arrow (which keeps nullable bigints exact)
+    # and come back as a driver-side LocalRelation that the chunk plan and
+    # the sink's key frame both read without re-running the scan, the
+    # #EDIT join or the dedup shuffle.
+    collected = ex.with_target_partition(scope, channels).toArrow()
+    local = spark.createDataFrame(collected)
+    chunks = ex.build_knowledge_chunks(
+        local.select(*scope.columns), users, channels, members
+    )
+    # K2: every in-scope message key is reprocessed — deletes run even for
+    # messages that no longer (or never) contain a knowledge block.  Each
+    # key carries the partition its chunks land in.
+    reprocessed = local.select("msg_key", "channel_name", "msg_date")
+    upsert_chunks(spark, output_path, chunks, reprocessed_keys=reprocessed)
+    return pc.count_distinct(collected["msg_key"]).as_py()
+
+
 def run_extraction(
     spark: SparkSession,
     msgs: DataFrame,
@@ -62,29 +94,10 @@ def run_extraction(
     run = IncrementalRun(state_path, now_micros)
     ckpt = run.checkpoint_micros
     scope = batch_scope(msgs, ckpt, lookback_days)
-
-    # The scope executes once: its rows, each with the partition it lands
-    # in, are collected through Arrow (which keeps nullable bigints exact)
-    # and come back as a driver-side LocalRelation that the chunk plan and
-    # the sink's key frame both read without re-running the scan, the
-    # #EDIT join or the dedup shuffle.
-    collected = ex.with_target_partition(scope, channels).toArrow()
-    local = spark.createDataFrame(collected)
-    chunks = ex.build_knowledge_chunks(
-        local.select(*scope.columns), users, channels, members, ckpt_micros=None
-    )
-    # K2: every in-scope message key is reprocessed — deletes run even for
-    # messages that no longer (or never) contain a knowledge block.  Each
-    # key carries the partition its chunks land in, so the sink needs no
-    # table scan to find it.
-    reprocessed = local.select("msg_key", "channel_name", "msg_date")
-
-    upsert_chunks(spark, output_path, chunks, reprocessed_keys=reprocessed)
+    n_keys = upsert_scope(spark, scope, users, channels, members, output_path)
     run.commit()
-
-    # A3 counters from work already done
     return {
         "checkpoint_before": ckpt,
         "checkpoint_after": run.start_micros,
-        "n_reprocessed_keys": pc.count_distinct(collected["msg_key"]).as_py(),
+        "n_reprocessed_keys": n_keys,
     }

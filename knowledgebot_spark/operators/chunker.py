@@ -2,8 +2,9 @@
 
 The reference chunker (VectorDatabase/TextProcessor.py:34-48) slides a
 fixed-size token window with overlap and keeps the final partial window; it
-infinite-loops when ``overlap >= chunk_size`` — here that is rejected at
-config time (config.EngineConfig) and by these functions.
+infinite-loops when ``overlap >= chunk_size`` — here these functions reject
+it.  ``config.EngineConfig`` validates its own chunk_size/chunk_overlap the
+same way, but no E2 path reads them: the CLI passes 20/5.
 
 Two implementations with identical semantics:
   * ``chunk_windows`` — JVM built-ins (sequence/slice/posexplode); the hot

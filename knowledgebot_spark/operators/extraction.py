@@ -159,15 +159,6 @@ def with_target_partition(msgs: DataFrame, channels: DataFrame) -> DataFrame:
     )
 
 
-def tombstone_targets(msgs: DataFrame, channels: DataFrame) -> DataFrame:
-    """K2 targets: ``(msg_key, channel_name, msg_date)`` of every message
-    in scope, knowledge block or not — the keys whose stored chunks an
-    upsert replaces, each with the partition its chunks land in."""
-    return with_target_partition(msgs, channels).select(
-        "msg_key", "channel_name", "msg_date"
-    )
-
-
 def format_output(df: DataFrame) -> DataFrame:
     """P4-P9 formatting columns (all JVM built-ins, no UDFs)."""
     ts = F.timestamp_micros(F.col("ts_micros"))
@@ -210,13 +201,11 @@ def build_knowledge_chunks(
     users: DataFrame,
     channels: DataFrame,
     members: DataFrame,
-    ckpt_micros: int | None = None,
-    lookback_days: int = 7,
 ) -> DataFrame:
-    """Full M1 spine: one declarative plan from messages to chunk rows."""
+    """Full M1 spine: one declarative plan from messages to chunk rows.
+    ``msgs`` is already in scope: freshness (F1/F2) is the caller's
+    ``filter_fresh`` or ``incremental.batch_scope``."""
     df = with_msg_key(msgs)
-    if ckpt_micros is not None:
-        df = filter_fresh(df, ckpt_micros, lookback_days)
     # F3 guard first: only messages that can yield blocks enter the mention
     # shuffle (extract_blocks re-applies it, harmlessly)
     df = df.filter(F.col("full_text").contains("#KNOWLEDGE"))

@@ -311,12 +311,10 @@ FROM out
 )
 def kb_spine_full(spark: SparkSession, sf: str) -> DataFrame:
     return ex.build_knowledge_chunks(
-        model.messages(spark, sf),
+        ex.filter_fresh(model.messages(spark, sf), CKPT, model.LOOKBACK_DAYS),
         model.users_dim(spark, sf),
         model.channels_dim(spark, sf),
         model.members(spark, sf),
-        ckpt_micros=CKPT,
-        lookback_days=model.LOOKBACK_DAYS,
     )
 
 

@@ -147,6 +147,7 @@ def stream_extraction_spine(spark: SparkSession, sf: str) -> DataFrame:
     import os
 
     from knowledgebot_spark import model
+    from knowledgebot_spark.incremental import upsert_scope
     from knowledgebot_spark.operators import extraction as ex
 
     base = _run_base("stream_e2e", sf)  # per-run unique dir (ADVICE r09)
@@ -164,12 +165,15 @@ def stream_extraction_spine(spark: SparkSession, sf: str) -> DataFrame:
         model.LOOKBACK_DAYS,
     )
     with sp.micro_batch_confs(spark):
-        q = sp.foreach_batch_upsert(
-            stream,
-            out,
-            ckpt,
-            transform=lambda b: ex.build_knowledge_chunks(b, users, channels, members),
-            reprocessed_keys_fn=lambda b: ex.tombstone_targets(b, channels),
+        q = (
+            stream.writeStream.foreachBatch(
+                lambda batch, _id: upsert_scope(
+                    batch.sparkSession, batch, users, channels, members, out
+                )
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination()
     return spark.read.parquet(out).selectExpr(*_SPINE_COLS.split(", "))

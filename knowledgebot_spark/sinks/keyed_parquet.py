@@ -10,25 +10,19 @@ Re-expresses the reference's delete-then-rewrite file sink
      `#KNOWLEDGE` filter at :493);
   2. append the new rows.
 
-Targets.  One upsert works from the ``(key, *partition)`` pairs it must
-delete, collected to the driver once; the partition prune predicate and
-the key delete are both built from that list.  The pairs come from one
-of two places:
+Targets.  Every upsert works from the ``(key, *partition)`` pairs it
+must delete, collected to the driver once.  They are the rows of
+``reprocessed_keys``, which must carry the partition columns, or, when
+it is ``None``, the ``(key, *partition)`` pairs of ``new_rows``.  No
+existing data is read to find them: the merge reads only the affected
+partition directories, so the table root is never listed.
 
-  * a key frame that carries the partition columns: its rows are the
-    targets, and no existing data is read to find them; the merge reads
-    only the affected partition directories, so the table root is never
-    listed.  This assumes a key's rows live in the partition its key
-    frame names, which holds when the partition is a function of the
-    key's message, as ``(channel_name, msg_date)`` is for
-    ``run_extraction`` and the streaming spine.  Stored rows of a key in
-    any other partition (say, after a channel rename) are not deleted;
-    pass keys only for such a batch.  Every row of ``new_rows`` must also
-    lie in a partition the frame names, or the overwrite replaces a
-    partition nobody read;
-  * a key-only frame, or none (the keys of ``new_rows``): the keys are
-    looked up in the existing table with a broadcast ``left_semi``, and
-    the partitions of ``new_rows`` are added.
+A delete is partition-scoped, as in the reference, whose delete matches
+a message's chunk files by their ``(channel, date, ts)`` name prefix
+(KnowledgeBot.py:351-379): stored rows of a key in a partition the
+targets do not name (say, after a channel rename) stay.  Every row of
+``new_rows`` must also lie in a partition the targets name, or the
+overwrite replaces a partition nobody read.
 
 Write.  The survivors of the affected partitions plus the new rows are
 written once, repartitioned by the partition columns (one file per
@@ -37,13 +31,16 @@ output and, at commit, swaps in only the partitions present in it.  A
 partition whose every row was tombstoned has no row in that output, so
 the swap leaves its old files in place; a listing of the affected
 directories before and after the write (metadata only) finds those
-partitions, and each is rewritten empty.
+partitions, and each is rewritten empty.  A fresh path is the same
+merge with no affected partition present: nothing is read, and the
+overwrite writes every partition of ``new_rows``.  No path overwrites the
+whole table.
 
 Scale posture (100 TB): the table is partitioned by
 ``(channel_name, msg_date)`` and an incremental batch reads and rewrites
 only the partitions its keys live in — never the whole table.  The
-driver holds one batch's target pairs; ``run_extraction`` hands it a key
-frame already on the driver (the batch's collected scope rows, message
+driver holds one batch's target pairs; ``incremental.upsert_scope`` hands
+it a key frame already on the driver (the batch's collected scope rows, message
 text included, bounded by the arrival window).
 """
 
@@ -112,17 +109,6 @@ def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
-def _has_data_files(path: str) -> bool:
-    """True when ``path`` holds a committed data file, i.e. one Spark's
-    listing would read.  A missing path, an empty directory or one left
-    with only a crashed write's staging files holds none."""
-    for _root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not _hidden(d)]
-        if any(not _hidden(f) for f in files):
-            return True
-    return False
-
-
 def _partition_dir(path: str, partition_cols: tuple[str, ...], values: tuple) -> str:
     """The directory Spark writes a partition to (values Hive-escaped)."""
     return path + "".join(
@@ -147,70 +133,42 @@ def upsert_chunks(
     key_col: str = "msg_key",
     partition_cols: tuple[str, ...] = DEFAULT_PARTITIONS,
 ) -> None:
-    """Delete-then-append keyed by ``key_col``.
+    """Delete-then-append keyed by ``key_col``, partition by partition.
 
-    ``reprocessed_keys`` holds every key whose rows must be replaced;
-    defaults to the keys present in ``new_rows``.  Pass it explicitly for
+    ``reprocessed_keys`` holds ``key_col`` and ``partition_cols``: every
+    ``(key, *partition)`` whose stored rows must be replaced.  Pass it for
     tag-removal tombstones (keys whose new message text produced zero
-    rows — K2 semantics).  When it also carries ``partition_cols``, each
-    key's partition is taken from it and the table is not scanned to find
-    it; it must then name every key of ``new_rows``.
+    rows — K2 semantics); it must then name the partition of every row of
+    ``new_rows``.  It defaults to the pairs of ``new_rows``.  A key's
+    rows in a partition the targets do not name are kept.
     """
-    # first write only when nothing is committed yet; an existing table
-    # is read below, and a failed read raises instead of being mistaken
-    # for "no table" and overwritten
-    if not _has_data_files(path):
-        (
-            new_rows.repartition(*partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-        return
-
-    # Targets: the (key, *partition) pairs this batch deletes, collected
-    # once.  Partition values are canonicalized to STRINGS Spark-side, as
-    # _partition_predicate compares them (null stays None).  Comparing raw
-    # values would make bigint 3 and string '3' different partitions and
-    # send every partition down the emptied-rewrite path
-    # (kb_vector_upsert's bigint bucket key caught that).
-    def _keyed(df: DataFrame) -> DataFrame:
-        return df.select(
+    key_frame = new_rows if reprocessed_keys is None else reprocessed_keys
+    # Partition values are canonicalized to STRINGS Spark-side, as a table
+    # read back surfaces them (null stays None).  Comparing raw values
+    # would make bigint 3 and string '3' different partitions and send
+    # every partition down the emptied-rewrite path (kb_vector_upsert's
+    # bigint bucket key caught that).
+    targets = {
+        tuple(r)
+        for r in key_frame.select(
             key_col, *[F.col(c).cast("string").alias(c) for c in partition_cols]
-        )
-
-    existing = None
-    if reprocessed_keys is not None and set(partition_cols) <= set(
-        reprocessed_keys.columns
-    ):
-        targets_df = _keyed(reprocessed_keys)
-    else:
-        existing = spark.read.parquet(path)
-        key_frame = new_rows if reprocessed_keys is None else reprocessed_keys
-        located = existing.join(
-            F.broadcast(key_frame.select(key_col)), key_col, "left_semi"
-        )
-        targets_df = _keyed(located).unionByName(_keyed(new_rows)).distinct()
-    targets = {tuple(r) for r in targets_df.collect()}
+        ).collect()
+    }
     affected = {t[1:] for t in targets}
     if not affected:
         return
 
     dirs = [_partition_dir(path, partition_cols, v) for v in affected]
     before = {d: _listing(d) for d in dirs}
-    if existing is None:
-        # only the affected partitions that hold files are read; the table
-        # root is never listed (past 32 directories that listing is a job)
-        present = [d for d, files in before.items() if files]
-        if present:
-            existing = spark.read.option("basePath", path).parquet(*present)
-
+    # only the affected partitions that hold files are read; the table
+    # root is never listed (past 32 directories that listing is a job)
+    present = [d for d, files in before.items() if files]
     out = new_rows
-    if existing is not None:
+    if present:
+        existing = spark.read.option("basePath", path).parquet(*present)
         # null keys never match a delete (as in an anti join)
         keys = [t[0] for t in targets if t[0] is not None]
-        part_pred = _partition_predicate(partition_cols, affected)
-        survivors = existing.filter(part_pred).filter(
+        survivors = existing.filter(
             F.col(key_col).isNull() | ~F.col(key_col).isin(keys)
         )
         out = survivors.select(

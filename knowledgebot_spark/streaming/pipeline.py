@@ -458,58 +458,6 @@ def distinct_pairs(events: DataFrame) -> DataFrame:
     ).dropDuplicates(["event_type", "event_date"])
 
 
-def foreach_batch_upsert(
-    stream: DataFrame,
-    output_path: str,
-    checkpoint_dir: str,
-    key_col: str = "msg_key",
-    partition_cols: tuple[str, ...] = ("channel_name", "msg_date"),
-    transform=None,
-    reprocessed_keys_fn=None,
-):
-    """Idempotent keyed sink: per-batch MERGE + streaming checkpoint (a
-    replayed batch rewrites the same keys to the same values, so retries
-    are no-ops).
-
-    K2 (tag-removal tombstones): with the default arguments the
-    reprocessed-key set is derived from the rows the batch EMITS, so a
-    re-seen message whose edit removed its ``#KNOWLEDGE`` block never
-    tombstones its stale chunks — the key is absent from the output.  For
-    the reference's delete-before-filter semantics (KnowledgeBot.py:485
-    deletes before the :493 filter), sink the PRE-FILTER stream and pass
-    both callbacks:
-
-      * ``reprocessed_keys_fn(batch) -> DataFrame`` — one column
-        (``key_col``) of every key the batch *saw*;
-      * ``transform(batch) -> DataFrame`` — the knowledge filter + chunk
-        shaping, applied per batch AFTER the keys are captured.
-
-    With ``reprocessed_keys_fn`` set, pure-tombstone batches (zero output
-    rows, some deletions) are executed rather than skipped."""
-    from knowledgebot_spark.sinks.keyed_parquet import upsert_chunks
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        keys = reprocessed_keys_fn(batch) if reprocessed_keys_fn else None
-        rows = transform(batch) if transform else batch
-        if keys is None and rows.isEmpty():
-            return
-        upsert_chunks(
-            batch.sparkSession,
-            output_path,
-            rows,
-            reprocessed_keys=keys,
-            key_col=key_col,
-            partition_cols=partition_cols,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stateful_totals_v2(events: DataFrame) -> DataFrame:
     """Per-event-type running totals via transformWithStateInPandas — the
     Spark 4 stateful v2 API (typed ValueState handles, timers, TTL) that

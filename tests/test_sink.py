@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
@@ -19,6 +20,9 @@ SCHEMA = (
     "msg_key string, channel_name string, msg_date string, "
     "snippet_no bigint, content string"
 )
+
+
+KEY_SCHEMA = "msg_key string, channel_name string, msg_date string"
 
 
 def _chunks(spark, rows):
@@ -81,7 +85,8 @@ def test_update_replaces_only_reprocessed_key(spark, tmp_path):
 
 def test_tag_removal_tombstone(spark, tmp_path):
     # K2: the delete runs even when the new text has no #KNOWLEDGE -> the
-    # reprocessed key is passed explicitly with ZERO new rows.
+    # reprocessed key (with its partition) is passed explicitly with ZERO
+    # new rows.
     path = str(tmp_path / "chunks")
     upsert_chunks(
         spark,
@@ -95,7 +100,7 @@ def test_tag_removal_tombstone(spark, tmp_path):
         ),
     )
     empty = _chunks(spark, [])
-    keys = spark.createDataFrame([("C1_1.0",)], ["msg_key"])
+    keys = spark.createDataFrame([("C1_1.0", "general", "20250101")], KEY_SCHEMA)
     upsert_chunks(spark, path, empty, reprocessed_keys=keys)
     assert _snapshot(spark, path) == [("C1_2.0", "general", "20250101", 1, "keep")]
 
@@ -114,7 +119,7 @@ def test_tombstone_can_empty_a_partition(spark, tmp_path):
         ),
     )
     empty = _chunks(spark, [])
-    keys = spark.createDataFrame([("C1_1.0",)], ["msg_key"])
+    keys = spark.createDataFrame([("C1_1.0", "general", "20250101")], KEY_SCHEMA)
     upsert_chunks(spark, path, empty, reprocessed_keys=keys)
     assert _snapshot(spark, path) == [("C2_2.0", "random", "20250102", 1, "keep")]
 
@@ -179,7 +184,7 @@ def test_tombstone_escaped_partition_value(spark, tmp_path):
         [("K1", weird, "20250101", 1, "stale"), ("K2", "normal", "20250101", 1, "keep")]
     )
     # tombstone the only row of the weird partition
-    keys = spark.createDataFrame([("K1",)], ["msg_key"])
+    keys = spark.createDataFrame([("K1", weird, "20250101")], KEY_SCHEMA)
     upsert_chunks(spark, path, _chunks(spark, []), reprocessed_keys=keys)
     assert _snapshot(spark, path) == [("K2", "normal", "20250101", 1, "keep")]
 
@@ -234,7 +239,10 @@ def test_tombstone_bool_and_null_partition_values(spark, tmp_path):
     )
     # tombstone K1 and K2 with zero replacement rows: their partitions
     # (flagged=true/region=eu and flagged=false/region=null) become empty
-    keys = spark.createDataFrame([("K1",), ("K2",)], ["msg_key"])
+    keys = spark.createDataFrame(
+        [("K1", True, "eu"), ("K2", False, None)],
+        "msg_key string, flagged boolean, region string",
+    )
     upsert_chunks(
         spark, path, spark.createDataFrame([], schema),
         reprocessed_keys=keys, key_col="msg_key",
@@ -254,10 +262,9 @@ def test_tombstone_bool_and_null_partition_values(spark, tmp_path):
 def test_failed_read_of_existing_table_raises_and_keeps_rows(
     spark, tmp_path, monkeypatch
 ):
-    """A read error on an existing table must propagate, never be taken
-    for "no table yet": the first-write branch overwrites the whole path,
-    so mistaking a transient failure for a missing table wipes every
-    partition the batch does not touch."""
+    """A read error on an existing table must propagate: taking a
+    transient failure for "no rows yet" would overwrite the affected
+    partitions with the new rows alone and lose their other keys."""
     from pyspark.sql.readwriter import DataFrameReader
 
     path = str(tmp_path / "chunks")
@@ -288,8 +295,9 @@ def test_failed_read_of_existing_table_raises_and_keeps_rows(
 
 def test_staging_leftovers_take_first_write_branch(spark, tmp_path):
     """A directory holding only a crashed write's leftovers (``_``- and
-    ``.``-prefixed staging entries, no committed data file) is written
-    fresh, the way Spark's own listing would see it: empty."""
+    ``.``-prefixed staging entries, no committed data file) is treated the
+    way Spark's own listing sees it, as empty: the merge finds no affected
+    partition present, reads nothing and writes the new rows."""
     path = tmp_path / "chunks"
     (path / "_temporary" / "0").mkdir(parents=True)
     (path / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"partial")
@@ -345,9 +353,10 @@ def test_upsert_writes_one_file_per_affected_partition(spark, tmp_path):
 
 
 def test_partition_keyed_upsert_reads_no_unaffected_partition(spark, tmp_path, rows_read):
-    """With a key frame that names each key's partition, the upsert reads
-    only the affected partitions: the 1000 rows of a cold partition are
-    never scanned to look keys up."""
+    """Whether the targets come from a key frame that names each key's
+    partition or from the new rows themselves, the upsert reads only the
+    affected partition: the 1000 rows of a cold partition are never
+    scanned to look keys up."""
     path = str(tmp_path / "chunks")
     cold = [(f"C9_{i}.0", "cold", "20240101", 1, "x") for i in range(1000)]
     hot = [
@@ -368,6 +377,22 @@ def test_partition_keyed_upsert_reads_no_unaffected_partition(spark, tmp_path, r
     assert read <= len(hot), f"read {read} rows; the affected partition holds {len(hot)}"
     assert _snapshot(spark, path) == sorted(
         cold + [("C1_1.0", "general", "20250101", 1, "new"), hot[1]]
+    )
+
+    # reprocessed_keys=None: the targets are the (key, partition) pairs of
+    # the new rows
+    batch = _chunks(spark, [("C1_2.0", "general", "20250101", 1, "new-2")])
+    read = rows_read(
+        "keyed-upsert-read-audit-default",
+        lambda: upsert_chunks(spark, path, batch),
+    )
+    assert read <= len(hot), f"read {read} rows; the affected partition holds {len(hot)}"
+    assert _snapshot(spark, path) == sorted(
+        cold
+        + [
+            ("C1_1.0", "general", "20250101", 1, "new"),
+            ("C1_2.0", "general", "20250101", 1, "new-2"),
+        ]
     )
 
 
@@ -418,10 +443,11 @@ def test_partition_keyed_tombstone_can_empty_a_partition(spark, tmp_path, monkey
 
 
 def test_partition_keyed_upsert_lists_only_affected_partitions(spark, tmp_path, rows_read):
-    """On a table of 40 partition directories, a partition-keyed upsert
-    reads the affected directory alone: no file-listing job (Spark lists
-    more than 32 directories in a parallel job) and no row of an
-    unaffected partition."""
+    """On a table of 40 partition directories, an upsert reads the affected
+    directory alone, whether its key frame names the partitions or it
+    takes them from the new rows: no file-listing job (Spark lists more
+    than 32 directories in a parallel job) and no row of an unaffected
+    partition."""
     path = str(tmp_path / "chunks")
     rows = [
         (f"C{c}_{i}.0", f"chan{c:02d}", "20250101", 1, "x")
@@ -431,24 +457,49 @@ def test_partition_keyed_upsert_lists_only_affected_partitions(spark, tmp_path, 
     upsert_chunks(spark, path, _chunks(spark, rows))
     assert len(os.listdir(path)) >= 40
 
-    batch = _chunks(spark, [("C0_1.0", "chan00", "20250101", 1, "new")])
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    want = {r[0]: r for r in rows}
     keys = spark.createDataFrame(
         [("C0_1.0", "chan00", "20250101")],
         "msg_key string, channel_name string, msg_date string",
     )
-    group = "keyed-upsert-listing-audit"
-    read = rows_read(
-        group, lambda: upsert_chunks(spark, path, batch, reprocessed_keys=keys)
-    )
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    listings = [
-        job
-        for job in sc.statusTracker().getJobIdsForGroup(group)
-        if "Listing leaf files" in str(store.job(job).description())
-    ]
-    assert not listings, f"the upsert ran {len(listings)} file-listing job(s)"
-    assert read <= 3, f"read {read} rows; the affected partition holds 3"
-    want = {r[0]: r for r in rows}
-    want["C0_1.0"] = ("C0_1.0", "chan00", "20250101", 1, "new")
-    assert _snapshot(spark, path) == sorted(want.values())
+    for key, reprocessed_keys in (("C0_1.0", keys), ("C0_2.0", None)):
+        new = (key, "chan00", "20250101", 1, "new")
+        batch = _chunks(spark, [new])
+        group = f"keyed-upsert-listing-audit-{key}"
+        read = rows_read(
+            group,
+            lambda: upsert_chunks(
+                spark, path, batch, reprocessed_keys=reprocessed_keys
+            ),
+        )
+        listings = [
+            job
+            for job in sc.statusTracker().getJobIdsForGroup(group)
+            if "Listing leaf files" in str(store.job(job).description())
+        ]
+        assert not listings, f"the upsert ran {len(listings)} file-listing job(s)"
+        assert read <= 3, f"read {read} rows; the affected partition holds 3"
+        want[key] = new
+        assert _snapshot(spark, path) == sorted(want.values())
+
+
+def test_delete_is_scoped_to_the_target_partition(spark, tmp_path):
+    """A key's stored rows are deleted only in the partitions its targets
+    name, as the reference deletes a message's chunk files by their
+    ``(channel, date, ts)`` name prefix: after a channel rename the new
+    row lands in the new partition and the old row stays.  Targets must
+    name their partition, so a key-only frame is refused."""
+    path = str(tmp_path / "chunks")
+    old = ("C1_1.0", "general", "20250101", 1, "before-rename")
+    upsert_chunks(spark, path, _chunks(spark, [old]))
+
+    new = ("C1_1.0", "renamed", "20250101", 1, "after-rename")
+    upsert_chunks(spark, path, _chunks(spark, [new]))
+    assert _snapshot(spark, path) == sorted([old, new])
+
+    keys = spark.createDataFrame([("C1_1.0",)], ["msg_key"])
+    with pytest.raises(AnalysisException, match="channel_name"):
+        upsert_chunks(spark, path, _chunks(spark, []), reprocessed_keys=keys)
+    assert _snapshot(spark, path) == sorted([old, new])

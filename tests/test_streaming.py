@@ -150,9 +150,11 @@ def test_streaming_extraction_spine_foreach_batch(spark, tmp_path):
             "snippet_no",
             "content",
         )
-        reprocessed = keyed.select("msg_key").distinct().withColumn(
-            "channel_name", F.lit(None).cast("string")
-        ).select("msg_key")
+        reprocessed = keyed.select(
+            "msg_key",
+            F.col("channel_id").alias("channel_name"),
+            F.lit("20250101").alias("msg_date"),
+        ).distinct()
         upsert_chunks(batch.sparkSession, out_path, chunks, reprocessed_keys=reprocessed)
 
     q = (
@@ -221,46 +223,47 @@ def test_stream_stream_join_boundaries(spark, tmp_path):
 
 
 def test_foreach_batch_upsert_tag_removal_tombstone(spark, tmp_path):
-    """K2 through the generic helper: sink the PRE-FILTER keyed stream with
-    transform= (knowledge filter + chunk shaping) and reprocessed_keys_fn=
-    (keys the batch SAW), so a re-seen message whose edit removed its
-    #KNOWLEDGE block tombstones its stale chunks — including the
-    pure-tombstone batch (zero output rows) the old isEmpty short-circuit
-    made impossible."""
+    """K2 on the streaming path: each micro-batch of the keyed stream goes
+    through ``upsert_scope``, which tombstones every key the batch SAW, so
+    a re-seen message whose edit removed its #KNOWLEDGE block deletes its
+    stale chunks — including in a pure-tombstone batch (zero chunk
+    rows)."""
+    from knowledgebot_spark.incremental import upsert_scope
     from knowledgebot_spark.operators import extraction as ex
-    from knowledgebot_spark.streaming.pipeline import foreach_batch_upsert
 
     src = str(tmp_path / "msgs")
     os.makedirs(src)
     msg_schema = (
-        "channel_id string, ts_raw string, ts_micros bigint, full_text string"
+        "channel_id string, ts_raw string, ts_micros bigint, user_id string, "
+        "full_text string"
     )
     out_path = str(tmp_path / "chunk_tbl")
     ck_path = str(tmp_path / "ckpt")
-
-    def to_chunks(batch):
-        return ex.extract_blocks(batch).select(
-            "msg_key",
-            F.col("channel_id").alias("channel_name"),
-            F.lit("20250101").alias("msg_date"),
-            "snippet_no",
-            "content",
-        )
+    users = spark.createDataFrame([("U1", "A")], ["user_id", "real_name"])
+    channels = spark.createDataFrame(
+        [("C1", "general", "t", "p")], ["channel_id", "name", "topic", "purpose"]
+    )
+    members = spark.createDataFrame(
+        [("C1", "U1", "A")], ["channel_id", "user_id", "real_name"]
+    )
 
     def run_once():
         stream = spark.readStream.schema(msg_schema).parquet(f"{src}/b*/")
-        keyed = ex.with_msg_key(stream)
-        q = foreach_batch_upsert(
-            keyed,
-            out_path,
-            ck_path,
-            transform=to_chunks,
-            reprocessed_keys_fn=lambda batch: batch.select("msg_key").distinct(),
+        q = (
+            ex.with_msg_key(stream)
+            .writeStream.foreachBatch(
+                lambda batch, _id: upsert_scope(
+                    batch.sparkSession, batch, users, channels, members, out_path
+                )
+            )
+            .option("checkpointLocation", ck_path)
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination()
 
     spark.createDataFrame(
-        [("C1", "1.000000", 1_000_000, "#KNOWLEDGE alpha #END")], msg_schema
+        [("C1", "1.000000", 1_000_000, "U1", "#KNOWLEDGE alpha #END")], msg_schema
     ).coalesce(1).write.parquet(f"{src}/b1")
     run_once()
     assert spark.read.parquet(out_path).count() == 1
@@ -268,10 +271,66 @@ def test_foreach_batch_upsert_tag_removal_tombstone(spark, tmp_path):
     # edit removes the tag: same msg_key re-seen with no knowledge block —
     # this batch produces ZERO chunk rows yet must still tombstone
     spark.createDataFrame(
-        [("C1", "1.000000", 1_000_000, "edited away the tag")], msg_schema
+        [("C1", "1.000000", 1_000_000, "U1", "edited away the tag")], msg_schema
     ).coalesce(1).write.parquet(f"{src}/b2")
     run_once()
     assert spark.read.parquet(out_path).count() == 0
+
+
+def test_streaming_spine_reads_each_micro_batch_once(spark, sf_dir, monkeypatch):
+    """``stream_extraction_spine`` scans each micro-batch of staged
+    messages once: the key frame and the chunk plan both read the batch's
+    collected rows.  Micro-batch jobs run on the stream thread, out of
+    reach of a job group set here, so the run is bracketed by marker jobs
+    and every stage between them is inspected."""
+    from pyspark.sql import DataFrameWriter
+
+    from knowledgebot_spark import model
+    from knowledgebot_spark.queries_streaming import stream_extraction_spine
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+
+    def marker() -> int:
+        """Run a one-task job; return its (the newest) stage id."""
+        sc.setJobGroup("spine-scan-marker", "spine-scan-marker")
+        try:
+            spark.range(1).count()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(
+            stage
+            for job in tracker.getJobIdsForGroup("spine-scan-marker")
+            for stage in tracker.getJobInfo(job).stageIds
+        )
+
+    def records(stage):
+        try:
+            return store.lastStageAttempt(stage).inputRecords()
+        except Exception:  # skipped stage
+            return 0
+
+    n_msgs = model.messages(spark, sf_dir).count()
+    # the first parquet write is the staging of the messages; the scans
+    # counted are the ones after it
+    write = DataFrameWriter.parquet
+    staged = []
+
+    def staging_write(self, *args, **kwargs):
+        write(self, *args, **kwargs)
+        if not staged:
+            staged.append(marker())
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", staging_write)
+    assert stream_extraction_spine(spark, sf_dir).count() > 0
+    monkeypatch.undo()
+    end = marker()
+    scans = [s for s in range(staged[0] + 1, end) if records(s) == n_msgs]
+    assert len(scans) == 1, (
+        f"stages {scans} each read all {n_msgs} staged messages"
+    )
 
 
 def test_python_stream_source_replay_is_deterministic():
