@@ -39,10 +39,8 @@ def batch_scope(msgs: DataFrame, ckpt_micros: int, lookback_days: int = 7) -> Da
     fresh = ex.filter_fresh(keyed, ckpt_micros, lookback_days)
     # #EDIT replies pull their parents back into scope even when the parent
     # itself is older than the checkpoint (J5 on the full keyed scan).
-    edit_parents = ex.with_msg_key(
-        ed.join_parents(ed.edit_replies(fresh), keyed).drop(
-            "edit_ts_raw", "parent_ts_micros"
-        )
+    edit_parents = ed.join_parents(ed.edit_replies(fresh), keyed).drop(
+        "edit_ts_raw", "parent_ts_micros"
     )
     return fresh.unionByName(edit_parents.select(fresh.columns)).dropDuplicates(
         ["msg_key"]
@@ -65,12 +63,10 @@ def upsert_scope(
     # in, are collected through Arrow (which keeps nullable bigints exact)
     # and come back as a driver-side LocalRelation that the chunk plan and
     # the sink's key frame both read without re-running the scan, the
-    # #EDIT join or the dedup shuffle.
+    # #EDIT join, the dedup shuffle or the channel join.
     collected = ex.with_target_partition(scope, channels).toArrow()
     local = spark.createDataFrame(collected)
-    chunks = ex.build_knowledge_chunks(
-        local.select(*scope.columns), users, channels, members
-    )
+    chunks = ex.build_knowledge_chunks(local, users, members)
     # K2: every in-scope message key is reprocessed — deletes run even for
     # messages that no longer (or never) contain a knowledge block.  Each
     # key carries the partition its chunks land in.

@@ -4,20 +4,19 @@ Re-expresses the reference's `process_channel` loop (KnowledgeBot.py:425-534)
 as one declarative DataFrame plan:
 
     scan -> freshness filters (F1/F2) -> attachment merge (P2, done in the
-    model) -> cheap substring guard (F3) -> regex block extract (P1) ->
-    posexplode + ordinal (A2) -> broadcast dim joins (J1/J3/J4) -> ordered
-    mention resolve (P3/J2/F8) -> formatting columns (P4-P9, P11, P12).
+    model) -> channel join (J3/F6) -> cheap substring guard (F3) -> ordered
+    mention resolve (P3/J2/F8) -> regex block extract (P1) -> posexplode
+    ordinal (A2) -> broadcast dim joins (J1/J4) -> formatting (P4-P9, P11, P12).
 
-Scale posture: the only shuffles are (a) the per-message ordinal window
-(keyed by msg_key — bounded per-message cardinality, no skew) and (b) the
-mention re-collect (same key).  All dimension joins are broadcast; the
-messages scan prunes to the referenced columns and pushes the freshness
-predicate down to parquet (verified via .explain PushedFilters).
+Scale posture: ordinals and mention names are computed within each
+message's row, so no message-keyed shuffle runs; all dimension joins are
+broadcast.  The messages scan prunes to the referenced columns and pushes
+the freshness predicate down to parquet (verified via .explain PushedFilters).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 BLOCK_RE = r"(?s)#KNOWLEDGE(.*?)#END"          # KnowledgeBot.py:497 (P1)
@@ -53,21 +52,20 @@ def filter_fresh(df: DataFrame, ckpt_micros: int, lookback_days: int = 7) -> Dat
 def extract_blocks(df: DataFrame, text_col: str = "full_text") -> DataFrame:
     """F3 guard + P1 regex extract + F4 empty filter + A2 ordinal.
 
-    The ordinal is anchored to ``posexplode`` document order (never shuffle
-    order) and counts only non-empty blocks, 1-based — matching the
-    reference's counter over stripped blocks (KnowledgeBot.py:507-513).
+    Blocks are trimmed and the empty ones dropped within each message's
+    array, so ``posexplode`` position + 1 is the 1-based ordinal over
+    non-empty blocks in document order — the reference's counter over
+    stripped blocks (KnowledgeBot.py:507-513) — never shuffle order.
     """
-    blocks = (
+    blocks = F.regexp_extract_all(F.col(text_col), F.lit(BLOCK_RE), 1)
+    # a lambda, not bare F.trim: transform would pass the index as the trim string
+    kept = F.filter(F.transform(blocks, lambda b: F.trim(b)), lambda b: b != "")  # P11, F4
+    return (
         df.filter(F.col(text_col).contains("#KNOWLEDGE"))  # F3 cheap guard
-        .withColumn("blocks", F.regexp_extract_all(F.col(text_col), F.lit(BLOCK_RE), 1))
-        .select("*", F.posexplode("blocks").alias("pos", "block"))
-        .filter(F.trim(F.col("block")) != "")              # F4
-        .drop("blocks")
+        .select("*", F.posexplode(kept).alias("pos", "content"))
+        .withColumn("snippet_no", F.col("pos") + 1)
+        .drop("pos")
     )
-    ordinal = Window.partitionBy("msg_key").orderBy("pos")
-    return blocks.withColumn("snippet_no", F.row_number().over(ordinal)).withColumn(
-        "content", F.trim(F.col("block"))                  # P11
-    ).drop("block")
 
 
 def resolve_author(df: DataFrame, users: DataFrame) -> DataFrame:
@@ -116,31 +114,22 @@ def resolve_mentions(df: DataFrame, users: DataFrame, text_col: str = "full_text
     """P3 extract + J2 order-preserving resolve + F8 empty guard.
 
     Mentions come from the *whole message*, not per block (reference
-    behavior, KnowledgeBot.py:520 — documented in SURVEY.md §2.2).  Order is
-    preserved by sorting collected (pos, name) structs on the posexplode
-    position, never relying on shuffle order.  Missing names resolve to
-    'UnknownUser'; messages without mentions get NULL (F8).
+    behavior, KnowledgeBot.py:520 — documented in SURVEY.md §2.2).  Each
+    ``<@id>``, in document order, is looked up in a user_id -> real_name
+    map built once per query.  Missing names resolve to 'UnknownUser';
+    messages without mentions get NULL (F8).
     """
-    ids = df.select(
-        "msg_key",
-        F.posexplode(
-            F.regexp_extract_all(F.col(text_col), F.lit(MENTION_RE), 1)
-        ).alias("pos", "mention_id"),
+    names = users.select(
+        F.map_from_entries(F.collect_list(F.struct("user_id", "real_name")))
+    ).scalar()
+    ids = F.regexp_extract_all(F.col(text_col), F.lit(MENTION_RE), 1)
+    resolved = F.transform(ids, lambda i: F.coalesce(F.col("_names")[i], F.lit(UNKNOWN_USER)))
+    # the map is bound to a column first: Spark rejects a subquery in a lambda
+    return (
+        df.withColumn("_names", names)
+        .withColumn("mentions_csv", F.when(F.size(ids) > 0, F.array_join(resolved, ", ")))
+        .drop("_names")
     )
-    u = F.broadcast(users.select(F.col("user_id").alias("mention_id"), "real_name"))
-    resolved = ids.join(u, "mention_id", "left").select(
-        "msg_key", "pos", F.coalesce("real_name", F.lit(UNKNOWN_USER)).alias("mention_name")
-    )
-    collected = resolved.groupBy("msg_key").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mention_name"))),
-                lambda s: s["mention_name"],
-            ),
-            ", ",
-        ).alias("mentions_csv")
-    )
-    return df.join(collected, "msg_key", "left")
 
 
 def msg_date() -> Column:
@@ -197,24 +186,22 @@ def format_output(df: DataFrame) -> DataFrame:
 
 
 def build_knowledge_chunks(
-    msgs: DataFrame,
+    scope: DataFrame,
     users: DataFrame,
-    channels: DataFrame,
     members: DataFrame,
 ) -> DataFrame:
     """Full M1 spine: one declarative plan from messages to chunk rows.
-    ``msgs`` is already in scope: freshness (F1/F2) is the caller's
-    ``filter_fresh`` or ``incremental.batch_scope``."""
-    df = with_msg_key(msgs)
-    # F3 guard first: only messages that can yield blocks enter the mention
-    # shuffle (extract_blocks re-applies it, harmlessly)
-    df = df.filter(F.col("full_text").contains("#KNOWLEDGE"))
+    ``scope`` holds keyed, in-scope messages (``filter_fresh`` or
+    ``incremental.batch_scope``) that have been through
+    ``with_target_partition``: the F6 channel join is not repeated."""
+    # F3 guard first: only messages that can yield blocks resolve their
+    # mentions (extract_blocks re-applies it, harmlessly)
+    df = scope.filter(F.col("full_text").contains("#KNOWLEDGE"))
     # mentions come from the whole message (KnowledgeBot.py:520), so resolve
     # them BEFORE the block explode — every block inherits the message list
     df = resolve_mentions(df, users)
     df = extract_blocks(df)
     df = resolve_author(df, users)
-    df = enrich_channel(df, channels)
     df = attach_members(df, members)
     df = format_output(df)
     return df.select(

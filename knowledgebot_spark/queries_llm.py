@@ -3840,6 +3840,7 @@ def llm_dedup_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
     def _materialize(item):
         name, fn = item
         sc = spark.sparkContext
+        # per-thread only in pinned-thread mode (PYSPARK_PIN_THREAD, default)
         sc.setJobDescription(f"overlap_report: {name}")
         try:
             # eager localCheckpoint: runs this detector's jobs NOW, on

@@ -310,10 +310,10 @@ FROM out
     tags=("M1", "P4", "P5", "P6", "P7", "P8", "P9", "J1", "J3", "J4", "A2"),
 )
 def kb_spine_full(spark: SparkSession, sf: str) -> DataFrame:
+    fresh = ex.filter_fresh(model.messages(spark, sf), CKPT, model.LOOKBACK_DAYS)
     return ex.build_knowledge_chunks(
-        ex.filter_fresh(model.messages(spark, sf), CKPT, model.LOOKBACK_DAYS),
+        ex.with_target_partition(ex.with_msg_key(fresh), model.channels_dim(spark, sf)),
         model.users_dim(spark, sf),
-        model.channels_dim(spark, sf),
         model.members(spark, sf),
     )
 

@@ -19,10 +19,11 @@ partition directories, so the table root is never listed.
 
 A delete is partition-scoped, as in the reference, whose delete matches
 a message's chunk files by their ``(channel, date, ts)`` name prefix
-(KnowledgeBot.py:351-379): stored rows of a key in a partition the
-targets do not name (say, after a channel rename) stay.  Every row of
-``new_rows`` must also lie in a partition the targets name, or the
-overwrite replaces a partition nobody read.
+(KnowledgeBot.py:351-379): stored rows of a key in a partition none of
+that key's targets name (say, after a channel rename) stay, whatever the
+other keys of the batch target.  Every row of ``new_rows`` must also lie
+in a partition the targets name, or the overwrite replaces a partition
+nobody read.
 
 Write.  The survivors of the affected partitions plus the new rows are
 written once, repartitioned by the partition columns (one file per
@@ -140,7 +141,7 @@ def upsert_chunks(
     tag-removal tombstones (keys whose new message text produced zero
     rows — K2 semantics); it must then name the partition of every row of
     ``new_rows``.  It defaults to the pairs of ``new_rows``.  A key's
-    rows in a partition the targets do not name are kept.
+    rows in a partition none of its own targets name are kept.
     """
     key_frame = new_rows if reprocessed_keys is None else reprocessed_keys
     # Partition values are canonicalized to STRINGS Spark-side, as a table
@@ -166,11 +167,17 @@ def upsert_chunks(
     out = new_rows
     if present:
         existing = spark.read.option("basePath", path).parquet(*present)
+        # each key is deleted only from the partition its target names;
         # null keys never match a delete (as in an anti join)
-        keys = [t[0] for t in targets if t[0] is not None]
-        survivors = existing.filter(
-            F.col(key_col).isNull() | ~F.col(key_col).isin(keys)
-        )
+        keys: dict[tuple, list] = {}
+        for key, *values in targets:
+            if key is not None:
+                keys.setdefault(tuple(values), []).append(key)
+        deleted = F.lit(False)
+        for values, ks in keys.items():
+            in_part = _partition_predicate(partition_cols, [values])
+            deleted = deleted | (in_part & F.col(key_col).isin(ks))
+        survivors = existing.filter(F.col(key_col).isNull() | ~deleted)
         out = survivors.select(
             [F.col(c).cast(new_rows.schema[c].dataType) for c in new_rows.columns]
         ).unionByName(new_rows)

@@ -14,7 +14,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # (query, what to look for in the plan)
 FLAGSHIPS = (
-    ("kb_spine_full", "broadcast dim joins; PushedFilters on the message scan"),
+    (
+        "kb_spine_full",
+        "broadcast dim joins; PushedFilters on the message scan; no Window, no SortMergeJoin",
+    ),
     (
         "rel_shipping_priority",
         "TPC-H Q3 shape: pushed filters, broadcast dims, TakeOrderedAndProject",

@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from knowledgebot_spark import incremental
 from knowledgebot_spark.incremental import batch_scope, run_extraction
 from knowledgebot_spark.sinks.checkpoint import IncrementalRun
 
@@ -160,6 +161,36 @@ def test_run_executes_its_scope_once(spark, dims, tmp_path, rows_read):
     assert once > 0
     assert run == once, f"the run read {run} message records; one scope execution reads {once}"
     assert spark.read.parquet(str(tmp_path / "chunks")).count() == 8
+
+
+def _reads(df, dim):
+    """How many leaves of ``df``'s analyzed plan scan ``dim``'s relation."""
+    leaf = dim._jdf.queryExecution().analyzed()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return sum(leaves.apply(i).sameResult(leaf) for i in range(leaves.size()))
+
+
+def test_batch_joins_the_channels_dim_once(spark, dims, tmp_path, monkeypatch):
+    """The channel join runs once per batch, before the scope collect: the
+    chunk rows handed to the sink are built from the collected rows, which
+    already carry ``channel_name`` and ``msg_date``, and read the
+    channels dim no more."""
+    _users, channels, members = dims
+    written = []
+
+    def upsert(spark, path, new_rows, **kwargs):
+        written.append(new_rows)
+        return real_upsert(spark, path, new_rows, **kwargs)
+
+    real_upsert = incremental.upsert_chunks
+    monkeypatch.setattr(incremental, "upsert_chunks", upsert)
+    rows = [_msg(8, "C1", "#KNOWLEDGE a #END"), _msg(9, "C1", "#KNOWLEDGE b #END")]
+    _run(spark, dims, rows, str(tmp_path / "chunks"), str(tmp_path / "state"), 10)
+
+    (chunks,) = written
+    assert _reads(chunks, members) == 1
+    assert _reads(chunks, channels) == 0
+    assert {r.channel_name for r in chunks.collect()} == {"general"}
 
 
 def _files_and_mtimes(path):

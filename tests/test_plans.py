@@ -5,6 +5,8 @@ UDFs in hot paths."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,11 +21,12 @@ def test_spine_uses_broadcast_joins(spark, sf_dir):
     from knowledgebot_spark.queries_pipeline import kb_spine_full
 
     plan = _plan(kb_spine_full(spark, sf_dir))
-    # users (x2: author + mentions), channels, members agg — all broadcast.
-    # (The one SortMergeJoin allowed is messages <- mention-agg on msg_key:
-    # both sides are message-cardinality and already hash-partitioned on the
-    # same key by the window/agg exchanges, so SMJ is the co-located plan.)
+    # users (author), channels, members agg — all broadcast.  The spine is
+    # narrow: block ordinals and mention names are computed per message,
+    # so no window and no message-keyed sort-merge join runs.
     assert plan.count("BroadcastHashJoin") >= 3
+    assert re.search(r"\bWindow\b", plan) is None
+    assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -503,3 +503,12 @@ def test_delete_is_scoped_to_the_target_partition(spark, tmp_path):
     with pytest.raises(AnalysisException, match="channel_name"):
         upsert_chunks(spark, path, _chunks(spark, []), reprocessed_keys=keys)
     assert _snapshot(spark, path) == sorted([old, new])
+
+    # the same holds when another key of the batch targets the old
+    # partition: each key is deleted only from its own target partition
+    path = str(tmp_path / "chunks2")
+    other = ("C1_2.0", "general", "20250101", 1, "j-before")
+    upsert_chunks(spark, path, _chunks(spark, [old, other]))
+    other_new = ("C1_2.0", "general", "20250101", 1, "j-after")
+    upsert_chunks(spark, path, _chunks(spark, [new, other_new]))
+    assert _snapshot(spark, path) == sorted([old, new, other_new])
