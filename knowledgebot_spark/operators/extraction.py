@@ -93,20 +93,16 @@ def enrich_channel(df: DataFrame, channels: DataFrame) -> DataFrame:
     return df.join(c, "channel_id", "inner")
 
 
-def members_agg(members: DataFrame) -> DataFrame:
-    """S5/A1: member names per channel, sorted for determinism (the
-    reference preserves Slack API order, which is not reproducible; sorting
-    is the documented deviation)."""
-    return members.groupBy("channel_id").agg(
-        F.array_sort(F.collect_list("real_name")).alias("member_names")
-    )
+def members_csv() -> Column:
+    """S5/A1/P12: the sorted, comma-joined member names of a members group
+    (the reference keeps Slack API order, which is not reproducible)."""
+    names = F.array_sort(F.collect_list("real_name"))
+    return F.array_join(names, ", ").alias("members_csv")
 
 
 def attach_members(df: DataFrame, members: DataFrame) -> DataFrame:
     """J4: broadcast join of the pre-aggregated members dim."""
-    m = members_agg(members).withColumn(
-        "members_csv", F.array_join("member_names", ", ")   # P12
-    ).drop("member_names")
+    m = members.groupBy("channel_id").agg(members_csv())
     return df.join(F.broadcast(m), "channel_id", "left")
 
 
@@ -117,7 +113,9 @@ def resolve_mentions(df: DataFrame, users: DataFrame, text_col: str = "full_text
     behavior, KnowledgeBot.py:520 — documented in SURVEY.md §2.2).  Each
     ``<@id>``, in document order, is looked up in a user_id -> real_name
     map built once per query.  Missing names resolve to 'UnknownUser';
-    messages without mentions get NULL (F8).
+    messages without mentions get NULL (F8).  A map lookup scans the keys,
+    so its cost grows with the users dim: the author, looked up on every
+    row, takes the broadcast join of ``resolve_author`` instead.
     """
     names = users.select(
         F.map_from_entries(F.collect_list(F.struct("user_id", "real_name")))

@@ -153,10 +153,8 @@ GROUP BY channel_id
     tags=("S5", "A1", "P12"),
 )
 def kb_members(spark: SparkSession, sf: str) -> DataFrame:
-    m = model.members(spark, sf)
-    return m.groupBy("channel_id").agg(
-        F.array_join(F.array_sort(F.collect_list("real_name")), ", ").alias("members_csv"),
-        F.count("*").alias("n_members"),
+    return model.members(spark, sf).groupBy("channel_id").agg(
+        ex.members_csv(), F.count("*").alias("n_members")
     )
 
 

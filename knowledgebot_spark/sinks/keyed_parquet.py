@@ -15,7 +15,8 @@ must delete, collected to the driver once.  They are the rows of
 ``reprocessed_keys``, which must carry the partition columns, or, when
 it is ``None``, the ``(key, *partition)`` pairs of ``new_rows``.  No
 existing data is read to find them: the merge reads only the affected
-partition directories, so the table root is never listed.
+partition directories, with the schema of ``new_rows``: no job lists the
+table root or reads the parquet footers.
 
 A delete is partition-scoped, as in the reference, whose delete matches
 a message's chunk files by their ``(channel, date, ts)`` name prefix
@@ -142,6 +143,8 @@ def upsert_chunks(
     rows — K2 semantics); it must then name the partition of every row of
     ``new_rows``.  It defaults to the pairs of ``new_rows``.  A key's
     rows in a partition none of its own targets name are kept.
+    Stored rows are read with the schema of ``new_rows``: a column that a
+    stored file lacks reads as NULL.
     """
     key_frame = new_rows if reprocessed_keys is None else reprocessed_keys
     # Partition values are canonicalized to STRINGS Spark-side, as a table
@@ -166,7 +169,7 @@ def upsert_chunks(
     present = [d for d, files in before.items() if files]
     out = new_rows
     if present:
-        existing = spark.read.option("basePath", path).parquet(*present)
+        existing = spark.read.schema(new_rows.schema).option("basePath", path).parquet(*present)
         # each key is deleted only from the partition its target names;
         # null keys never match a delete (as in an anti join)
         keys: dict[tuple, list] = {}
@@ -178,9 +181,7 @@ def upsert_chunks(
             in_part = _partition_predicate(partition_cols, [values])
             deleted = deleted | (in_part & F.col(key_col).isin(ks))
         survivors = existing.filter(F.col(key_col).isNull() | ~deleted)
-        out = survivors.select(
-            [F.col(c).cast(new_rows.schema[c].dataType) for c in new_rows.columns]
-        ).unionByName(new_rows)
+        out = survivors.unionByName(new_rows)
 
     # Dynamic partition overwrite: the job stages its output and, at
     # commit, replaces only the partitions present in `out` (== the

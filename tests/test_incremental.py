@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from knowledgebot_spark import incremental
 from knowledgebot_spark.incremental import batch_scope, run_extraction
+from knowledgebot_spark.sinks import checkpoint
 from knowledgebot_spark.sinks.checkpoint import IncrementalRun
 
 MSG_SCHEMA = (
@@ -161,6 +162,47 @@ def test_run_executes_its_scope_once(spark, dims, tmp_path, rows_read):
     assert once > 0
     assert run == once, f"the run read {run} message records; one scope execution reads {once}"
     assert spark.read.parquet(str(tmp_path / "chunks")).count() == 8
+
+
+def test_crash_before_the_checkpoint_commit_heals_on_rerun(
+    spark, dims, tmp_path, monkeypatch
+):
+    """A run that dies after its upsert but before the checkpoint commit
+    raises and leaves the old stamp; re-running it gives the table and the
+    checkpoint of a run that never crashed."""
+    rows1 = [_msg(8, "C1", "#KNOWLEDGE eight #END"), _msg(9, "C1", "#KNOWLEDGE nine #END")]
+    rows2 = [
+        _msg(8, "C1", "tag was removed"),
+        _msg(9, "C1", "#KNOWLEDGE nine-v2 #END"),
+        _msg(11, "C1", "#EDIT remove it", thread=8),
+        _msg(12, "C1", "#KNOWLEDGE twelve #END"),
+    ]
+
+    def snapshot(out):
+        return sorted(map(tuple, spark.read.parquet(out).collect()))
+
+    clean_out, clean_state = str(tmp_path / "clean"), str(tmp_path / "clean_state")
+    _run(spark, dims, rows1, clean_out, clean_state, now_days=10)
+    _run(spark, dims, rows2, clean_out, clean_state, now_days=12)
+
+    out, state = str(tmp_path / "chunks"), str(tmp_path / "state")
+    _run(spark, dims, rows1, out, state, now_days=10)
+    save = checkpoint.save_state
+
+    def crash(*args):
+        raise OSError("injected crash")
+
+    monkeypatch.setattr(checkpoint, "save_state", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        _run(spark, dims, rows2, out, state, now_days=12)
+    assert IncrementalRun(state, 0).checkpoint_micros == 10 * DAY
+
+    monkeypatch.setattr(checkpoint, "save_state", save)
+    stats = _run(spark, dims, rows2, out, state, now_days=12)
+    assert stats["checkpoint_before"] == 10 * DAY
+    assert IncrementalRun(state, 0).checkpoint_micros == 12 * DAY
+    assert IncrementalRun(clean_state, 0).checkpoint_micros == 12 * DAY
+    assert snapshot(out) == snapshot(clean_out)
 
 
 def _reads(df, dim):

@@ -21,10 +21,11 @@ def test_spine_uses_broadcast_joins(spark, sf_dir):
     from knowledgebot_spark.queries_pipeline import kb_spine_full
 
     plan = _plan(kb_spine_full(spark, sf_dir))
-    # users (author), channels, members agg — all broadcast.  The spine is
-    # narrow: block ordinals and mention names are computed per message,
-    # so no window and no message-keyed sort-merge join runs.
-    assert plan.count("BroadcastHashJoin") >= 3
+    # users (author), channels, members agg: all broadcast, each counted
+    # once by its node header.  The spine is narrow: block ordinals and
+    # mention names are computed per message, so no window and no
+    # message-keyed sort-merge join runs.
+    assert len(re.findall(r"^\(\d+\) BroadcastHashJoin$", plan, re.M)) == 3
     assert re.search(r"\bWindow\b", plan) is None
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan

@@ -442,12 +442,25 @@ def test_partition_keyed_tombstone_can_empty_a_partition(spark, tmp_path, monkey
     assert tasks <= 1, f"rewriting an empty partition ran {tasks} tasks"
 
 
+def _query_jobs(spark) -> set[int]:
+    """Ids of the jobs that ran inside a SQL query execution."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    jobs = set()
+    for i in range(executions.size()):
+        ids = executions.apply(i).jobs().keysIterator()
+        while ids.hasNext():
+            jobs.add(int(str(ids.next())))
+    return jobs
+
+
 def test_partition_keyed_upsert_lists_only_affected_partitions(spark, tmp_path, rows_read):
     """On a table of 40 partition directories, an upsert reads the affected
     directory alone, whether its key frame names the partitions or it
     takes them from the new rows: no file-listing job (Spark lists more
     than 32 directories in a parallel job) and no row of an unaffected
-    partition."""
+    partition.  It reads the stored rows with the schema of the new rows,
+    so no schema-inference job reads their parquet footers: every job of
+    the upsert runs inside a query execution, which that job does not."""
     path = str(tmp_path / "chunks")
     rows = [
         (f"C{c}_{i}.0", f"chan{c:02d}", "20250101", 1, "x")
@@ -480,6 +493,13 @@ def test_partition_keyed_upsert_lists_only_affected_partitions(spark, tmp_path, 
             if "Listing leaf files" in str(store.job(job).description())
         ]
         assert not listings, f"the upsert ran {len(listings)} file-listing job(s)"
+        in_query = _query_jobs(spark)
+        outside = [
+            str(store.job(job).name())
+            for job in sc.statusTracker().getJobIdsForGroup(group)
+            if job not in in_query
+        ]
+        assert not outside, f"the upsert ran jobs outside a query: {outside}"
         assert read <= 3, f"read {read} rows; the affected partition holds 3"
         want[key] = new
         assert _snapshot(spark, path) == sorted(want.values())
@@ -512,3 +532,65 @@ def test_delete_is_scoped_to_the_target_partition(spark, tmp_path):
     other_new = ("C1_2.0", "general", "20250101", 1, "j-after")
     upsert_chunks(spark, path, _chunks(spark, [new, other_new]))
     assert _snapshot(spark, path) == sorted([old, new, other_new])
+
+
+def test_crash_before_the_emptied_partition_rewrite_heals_on_rerun(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the dynamic overwrite and the emptied-partition
+    rewrite leaves the tombstoned key's partition as it was; re-running
+    the same upsert reaches the table of an uninterrupted one."""
+    path = str(tmp_path / "chunks")
+    upsert_chunks(
+        spark,
+        path,
+        _chunks(
+            spark,
+            [
+                ("C1_1.0", "general", "20250101", 1, "only-row-in-part"),
+                ("C2_2.0", "random", "20250102", 1, "old"),
+            ],
+        ),
+    )
+    keys = spark.createDataFrame(
+        [("C1_1.0", "general", "20250101"), ("C2_2.0", "random", "20250102")],
+        KEY_SCHEMA,
+    )
+    batch = _chunks(spark, [("C2_2.0", "random", "20250102", 1, "new")])
+    write = DataFrameWriter.parquet
+
+    def crashing_write(self, target, *args, **kwargs):
+        if target != path:  # the emptied partition's rewrite
+            raise RuntimeError("injected crash")
+        return write(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing_write)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert_chunks(spark, path, batch, reprocessed_keys=keys)
+    # the overwrite committed; the tombstoned partition was not rewritten
+    assert _snapshot(spark, path) == [
+        ("C1_1.0", "general", "20250101", 1, "only-row-in-part"),
+        ("C2_2.0", "random", "20250102", 1, "new"),
+    ]
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    upsert_chunks(spark, path, batch, reprocessed_keys=keys)
+    assert _snapshot(spark, path) == [("C2_2.0", "random", "20250102", 1, "new")]
+
+
+def test_stored_file_lacking_a_column_reads_null(spark, tmp_path):
+    """The merge reads stored rows with the schema of the new rows: a
+    stored file without one of their columns gives its surviving rows a
+    NULL there, and the rewritten partition carries the column."""
+    path = str(tmp_path / "chunks")
+    spark.createDataFrame(
+        [("C1_1.0", "general", "20250101", 1)],
+        "msg_key string, channel_name string, msg_date string, snippet_no bigint",
+    ).write.partitionBy("channel_name", "msg_date").parquet(path)
+    upsert_chunks(
+        spark, path, _chunks(spark, [("C1_2.0", "general", "20250101", 1, "new")])
+    )
+    assert _snapshot(spark, path) == [
+        ("C1_1.0", "general", "20250101", 1, None),
+        ("C1_2.0", "general", "20250101", 1, "new"),
+    ]
