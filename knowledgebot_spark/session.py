@@ -20,16 +20,40 @@ so a local session finds it from any working directory.  On a cluster the
 package must be importable where the executors run (installed, or on their
 ``PYTHONPATH``): the daemon imports it when it starts, before any task adds
 its ``--py-files`` to ``sys.path``.
+
+The JVM talks to the Python workers, and the driver to the JVM, over Unix
+domain sockets (``spark.python.unix.domain.socket.enabled``), not loopback
+TCP, where every Python job waited about 40 ms on the JVM side of its
+connections (timings in ``pydaemon``).  Each socket is named
+``<dir>/.<uuid4>.sock``, 43 bytes after the directory, and ``sun_path``
+holds 107, so the directory must be at most 64 bytes.  Spark's default,
+``java.io.tmpdir``, can be longer (a job's scratch directory under its
+checkout), so a session built here owns a short ``/tmp/kbpy-*`` directory,
+removed when the interpreter exits.  A process killed before it exits
+leaves that one empty directory behind.  ``extra_conf`` may override
+either key.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # directory that holds the knowledgebot_spark package, for the workers
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SOCKET_DIR = "spark.python.unix.domain.socket.dir"
+
+
+def _socket_dir() -> str:
+    """A fresh short directory for the session's sockets, removed at exit."""
+    path = tempfile.mkdtemp(prefix="kbpy-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_session(
@@ -92,8 +116,12 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "knowledgebot_spark.pydaemon")
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
     conf = dict(extra_conf or {})
+    # a reused SparkContext keeps the socket directory it was built with
+    if SparkContext._active_spark_context is None and _SOCKET_DIR not in conf:
+        conf[_SOCKET_DIR] = _socket_dir()
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )

@@ -1,10 +1,13 @@
 """The engine's Python worker daemon: per-task ``importlib.invalidate_caches()``
 must not re-read an unchanged zip archive, must still pick up a changed
-one, and the session must find the daemon from any working directory."""
+one, and the session must find the daemon from any working directory.  The
+workers talk to the JVM over Unix domain sockets in a short directory the
+session owns, whatever the temp directory is."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import subprocess
 import sys
@@ -105,3 +108,69 @@ def test_session_runs_python_tasks_from_a_foreign_directory(tmp_path):
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_workers_use_a_unix_socket_from_a_deep_temp_dir(tmp_path):
+    deep = tmp_path / ("d" * 100)  # too long for a socket path under it
+    deep.mkdir()
+    script = textwrap.dedent(
+        f"""
+        import json, os, sys
+        sys.path.insert(0, {REPO!r})
+        from knowledgebot_spark.session import get_session
+
+        spark = get_session(
+            "deep-tmp",
+            master="local[1]",
+            extra_conf={{"spark.driver.extraJavaOptions": "-Djava.io.tmpdir={deep}"}},
+        )
+        sc = spark.sparkContext
+        [flag] = (
+            sc.parallelize([0], 1)
+            .map(lambda _: os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED"))
+            .collect()
+        )
+        [row] = spark.createDataFrame([([1.0, 2.0],)], "qvec array<float>").collect()
+        print(json.dumps({{
+            "flag": flag,
+            "qvec": row.qvec,
+            "jvm_tmpdir": sc._jvm.java.lang.System.getProperty("java.io.tmpdir"),
+            "socket_dir": sc.getConf().get("spark.python.unix.domain.socket.dir"),
+        }}))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, TMPDIR=str(deep), SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["jvm_tmpdir"] == str(deep)
+    assert out["flag"] == "True"
+    assert out["qvec"] == [1.0, 2.0]
+    assert len(os.fsencode(out["socket_dir"])) <= 64
+    assert not os.path.exists(out["socket_dir"])
+
+
+def test_reused_session_keeps_its_socket_dir(spark, monkeypatch):
+    import tempfile
+
+    from knowledgebot_spark.session import get_session
+
+    def no_new_dir(*args, **kwargs):
+        raise AssertionError("a reused session created a directory")
+
+    socket_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    assert os.path.basename(socket_dir).startswith("kbpy-")
+    assert os.path.isdir(socket_dir)
+    monkeypatch.setattr(tempfile, "mkdtemp", no_new_dir)
+    same_conf = {"spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions")}
+    for again in (get_session(), get_session(extra_conf=same_conf)):
+        assert again is spark
+        conf = again.sparkContext.getConf()
+        assert conf.get("spark.python.unix.domain.socket.dir") == socket_dir
