@@ -593,9 +593,9 @@ FROM (SELECT doc_id, str_split(coalesce(text, '') , ' ') tk FROM documents),
     tags=("U4", "embedding"),
 )
 def kb_embed(spark: SparkSession, sf: str) -> DataFrame:
-    """U4 deterministic hash embedder, JVM built-in formulation in exact
-    integer micro-units (the pandas-UDF float variant with matching
-    semantics is operators.embedding).
+    """U4 deterministic hash embedder in exact integer micro-units (the
+    float variant, a Spark expression over the same ``token_component_col``,
+    is ``operators.embedding.with_embedding``).
 
     Formulated as ONE token explode with 16 codegen'd md5 component
     columns per token row -> per-doc partial+final agg of 16 sums -> a
@@ -613,15 +613,10 @@ def kb_embed(spark: SparkSession, sf: str) -> DataFrame:
         F.explode(F.split(F.coalesce("text", F.lit("")), " ")).alias("t"),
     )
 
-    def comp(j: int) -> F.Column:
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat_ws(":", "t", F.lit(j))), 1, 8), 16, 10
-            ).cast("bigint")
-            % 1000
-        ).alias(f"c{j}")
-
-    per_tok = toks.select("doc_id", *[comp(j) for j in range(16)])
+    per_tok = toks.select(
+        "doc_id",
+        *[em.token_component_col("t", j).alias(f"c{j}") for j in range(16)],
+    )
     sums = per_tok.groupBy("doc_id").agg(
         F.count("*").alias("n"),
         *[F.sum(f"c{j}").alias(f"s{j}") for j in range(16)],
@@ -2231,17 +2226,11 @@ def _query_embedding_micro(query: str, dim: int = 16) -> list[int]:
     """Driver-side constant: the deterministic hash embedding of a literal
     query string in exact integer micro-units (same formula as kb_embed —
     a constant folded from a constant, not data pulled to the driver)."""
-    import hashlib
-
     toks = query.split(" ")
-    out = []
-    for j in range(dim):
-        s = sum(
-            int(hashlib.md5(f"{t}:{j}".encode()).hexdigest()[:8], 16) % 1000
-            for t in toks
-        )
-        out.append(s * 1000 // len(toks))
-    return out
+    return [
+        sum(em._token_component(t, j) for t in toks) * 1000 // len(toks)
+        for j in range(dim)
+    ]
 
 
 _RAG_QUERY = "spark hash join vector"
@@ -2304,15 +2293,11 @@ def kb_rag_search(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", "chunk_pos", F.explode(F.split("chunk_text", " ")).alias("t")
     )
 
-    def comp(j: int) -> F.Column:
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat_ws(":", "t", F.lit(j))), 1, 8), 16, 10
-            ).cast("bigint")
-            % 1000
-        ).alias(f"c{j}")
-
-    per_tok = toks.select("doc_id", "chunk_pos", *[comp(j) for j in range(_RAG_DIM)])
+    per_tok = toks.select(
+        "doc_id",
+        "chunk_pos",
+        *[em.token_component_col("t", j).alias(f"c{j}") for j in range(_RAG_DIM)],
+    )
     sums = per_tok.groupBy("doc_id", "chunk_pos").agg(
         F.count("*").alias("n"),
         *[F.sum(f"c{j}").alias(f"s{j}") for j in range(_RAG_DIM)],

@@ -94,3 +94,24 @@ def test_cosine_dot_fold_lives_only_in_similarity():
         if dot_fold.search(src.read_text(encoding="utf-8"))
     }
     assert found == {"operators/similarity.py"}
+
+
+def test_hash_component_lives_only_in_embedding():
+    """The md5 token component of the hash embedder has one Spark and one
+    Python definition, both in operators/embedding.py: no other package
+    module spells it through the Column API, in Spark SQL (``md5(concat_ws(
+    ':', token, j))``) or in Python; the DuckDB oracle strings
+    (``md5(t || ':' || ...)``) do not match."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "knowledgebot_spark"
+    component = re.compile(
+        r"""md5\(F\.concat_ws\(":"|md5\(concat_ws\(':', [^,()]+, [^,()]+\)\)|md5\(f"\{"""
+    )
+    found = {
+        src.relative_to(pkg).as_posix()
+        for src in pkg.rglob("*.py")
+        if component.search(src.read_text(encoding="utf-8"))
+    }
+    assert found == {"operators/embedding.py"}
